@@ -76,11 +76,12 @@ def doc_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     that catch looping/boilerplate generations exact dedup misses.
 
     Everything is computed INSIDE the row with array higher-order
-    functions (transform / filter / array_max over the token array):
+    functions (transform / array_sort / aggregate over the token array):
     map-only, zero shuffles, zero UDFs — the filter runs at parquet
     scan speed no matter the corpus size. The most-frequent-2-gram
-    multiplicity is O(distinct x total) per doc, bounded by document
-    length, not corpus size."""
+    multiplicity is the longest run of equal neighbours in the sorted
+    2-grams: O(n log n) per doc, bounded by document length, not
+    corpus size."""
     # spread(): the fixture's 1-row-group parquet scans as ONE task; the
     # per-doc 2-gram multiplicity fold is the compute-heavy narrow stage
     # this repartition parallelizes (production many-file input makes it
@@ -108,19 +109,35 @@ def gopher_signals(d: DataFrame) -> DataFrame:
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    top2 = F.when(F.size("g2") == 0, F.lit(0.0)).otherwise(
+    # Top-2-gram multiplicity = longest run of equal neighbours in the
+    # sorted 2-grams: one O(n log n) sort plus one fold. The fold's
+    # lambdas read only their own variables, so when the optimizer
+    # inlines g2 into a pushed-down `keep` filter the gram build still
+    # runs once per row, never once per lambda call. Guards test n_words
+    # (not size(g2)) for the same reason: each gram array is referenced
+    # exactly once.
+    def longest_run(acc, x):
+        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
+        return F.struct(x.alias("prev"), run.alias("run"),
+                        F.greatest(acc["best"], run).alias("best"))
+
+    top2 = F.when(
+        F.col("n_words") >= 2,
         2.0
-        * F.array_max(
-            F.transform(
-                F.array_distinct("g2"),
-                lambda d_: F.size(F.filter(F.col("g2"), lambda x: x == d_)),
-            )
+        * F.aggregate(
+            F.array_sort("g2"),
+            F.struct(F.lit(None).cast("string").alias("prev"),
+                     F.lit(0).alias("run"), F.lit(0).alias("best")),
+            longest_run,
+            lambda acc: acc["best"],
         ).cast("double")
-        / F.col("n_words")
-    )
-    dup3 = F.when(F.size("g3") == 0, F.lit(0.0)).otherwise(
-        1.0 - F.size(F.array_distinct("g3")).cast("double") / F.size("g3")
-    )
+        / F.col("n_words"),
+    ).otherwise(F.lit(0.0))
+    dup3 = F.when(
+        F.col("n_words") >= 3,
+        1.0 - F.size(F.array_distinct("g3")).cast("double")
+        / (F.col("n_words") - 2),
+    ).otherwise(F.lit(0.0))
     mwl = (
         F.aggregate(
             F.transform("toks", F.length), F.lit(0).cast("bigint"),

@@ -73,23 +73,19 @@ def get_spark(app_name: str = "dynamic-etl-pipeline-spark",
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    if not master.startswith("local["):
-        # Multi-process masters (local-cluster sanity, a real cluster
-        # submit without --py-files): executor Python workers don't
-        # inherit the driver shell's import path, so cloudpickled UDFs
-        # referencing this package die with ModuleNotFoundError unless
-        # the repo root rides along. A real deployment ships a wheel
-        # via --py-files; executorEnv.PYTHONPATH is the single-host
-        # equivalent (r8: the r7 cluster-sanity pass silently depended
-        # on an exported PYTHONPATH).
-        repo_root = os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__))
-        )
-        existing = os.environ.get("PYTHONPATH", "")
-        builder = builder.config(
-            "spark.executorEnv.PYTHONPATH",
-            f"{repo_root}{os.pathsep}{existing}" if existing else repo_root,
-        )
+    # Executor Python workers don't inherit the driver's import path:
+    # on a multi-process master (local-cluster sanity, a cluster submit
+    # without --py-files) and on local[...] launched from any cwd but
+    # the repo root, cloudpickled UDFs and Arrow kernels referencing
+    # this package die with ModuleNotFoundError unless the repo root
+    # rides along. A real deployment ships a wheel via --py-files;
+    # executorEnv.PYTHONPATH is the single-host equivalent.
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    existing = os.environ.get("PYTHONPATH", "")
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH",
+        f"{repo_root}{os.pathsep}{existing}" if existing else repo_root,
+    )
     for key, value in {**BUILD_CONF, **RUNTIME_CONF}.items():
         builder = builder.config(key, value)
     return tune(builder.getOrCreate())

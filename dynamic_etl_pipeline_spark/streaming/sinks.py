@@ -109,7 +109,7 @@ def _drain_foreach_batch(stream_df: DataFrame, body, checkpoint: str, *,
 
 def run_available_now_to_memory(stream_df: DataFrame,
                                 output_mode: str = "complete",
-                                timeout_s: int = 300,
+                                timeout_s: float = 300,
                                 state_partitions: int | None = 8) -> DataFrame:
     """Process everything currently available, stop, return results.
 
@@ -123,6 +123,9 @@ def run_available_now_to_memory(stream_df: DataFrame,
     partition, and at verification scale 32 stores are pure overhead
     (a real deployment sizes this to key cardinality and keeps it fixed
     for the checkpoint's lifetime).
+
+    Raises ``TimeoutError`` when the drain outlives ``timeout_s``: the
+    memory table would hold only the batches finished so far.
     """
     spark = stream_df.sparkSession
     name = f"vr_{uuid.uuid4().hex[:12]}"
@@ -138,7 +141,10 @@ def run_available_now_to_memory(stream_df: DataFrame,
             .start()
         )
         try:
-            q.awaitTermination(timeout_s)
+            if not q.awaitTermination(timeout_s):
+                raise TimeoutError(
+                    f"memory drain {name} did not finish within {timeout_s}s"
+                )
         finally:
             q.stop()
     finally:

@@ -5,9 +5,19 @@ texts the fixture corpus never produces (the ADVICE r01 failure mode)
 
 from __future__ import annotations
 
+import random
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
 
 from dynamic_etl_pipeline_spark.queries.curation import (
+    _DUP3_MAX,
+    _MAX_MWL,
+    _MAX_WORDS,
+    _MIN_MWL,
+    _MIN_WORDS,
+    _TOP2_MAX,
     boilerplate_ngrams,
     gopher_signals,
 )
@@ -81,10 +91,72 @@ def test_boilerplate_short_docs_dropped_not_crashed(spark):
     assert {r["doc_id"] for r in out} == {1}  # <n tokens: no positions
 
 
+def _py_round6(x: float) -> float:
+    # Spark's round(): HALF_UP on the double's shortest decimal repr
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _py_gopher(text: str) -> dict:
+    """Pure-Python restatement of gopher_signals for one document."""
+    toks = text.split(" ")
+    n = len(toks)
+    g2 = [" ".join(toks[i:i + 2]) for i in range(n - 1)]
+    g3 = [" ".join(toks[i:i + 3]) for i in range(n - 2)]
+    mwl = _py_round6(sum(map(len, toks)) / n)
+    top2 = _py_round6(2 * max(Counter(g2).values()) / n) if g2 else 0.0
+    dup3 = _py_round6(1.0 - len(set(g3)) / len(g3)) if g3 else 0.0
+    keep = (_MIN_WORDS <= n <= _MAX_WORDS and _MIN_MWL <= mwl <= _MAX_MWL
+            and top2 < _TOP2_MAX and dup3 < _DUP3_MAX)
+    return {"n_words": n, "mean_word_len": mwl, "top2gram_frac": top2,
+            "dup3gram_frac": dup3, "keep": keep}
+
+
+def _parity_docs() -> list[str]:
+    rng = random.Random(20240917)
+    vocab = [f"w{i}" for i in range(150)] + ["alpha", "beta", "gamma"]
+    docs = ["a a a a a a a a a a a a", "x y x y p q p q r s t u v w",
+            "k l m k l m k l m n o p", "one two", "solo"]
+    for _ in range(30):  # heavy repetition: a 2-4 word vocabulary
+        words = rng.sample(vocab, rng.randint(2, 4))
+        docs.append(" ".join(rng.choice(words) for _ in range(rng.randint(8, 60))))
+    for _ in range(15):  # tied top 2-grams: two bigrams repeated equally
+        a, b = rng.sample(vocab, 2), rng.sample(vocab, 2)
+        reps = rng.randint(2, 5)
+        filler = rng.sample(vocab, rng.randint(5, 30))
+        docs.append(" ".join(a + filler[:3] + (a + b) * reps + filler[3:] + b))
+    for _ in range(20):  # mostly clean text, 10-80 words
+        docs.append(" ".join(rng.choice(vocab) for _ in range(rng.randint(10, 80))))
+    for n, width in ((200, 150), (300, 150), (400, 150), (250, 12), (350, 40)):
+        docs.append(" ".join(rng.choice(vocab[:width]) for _ in range(n)))
+    return docs
+
+
+def test_gopher_signals_match_python_restatement(spark):
+    docs = _parity_docs()
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
+    want = {i: _py_gopher(t) for i, t in enumerate(docs)}
+    got = {r["doc_id"]: {k: v for k, v in r.asDict().items() if k != "doc_id"}
+           for r in gopher_signals(df).collect()}
+    assert got == want
+    kept = {i for i, w in want.items() if w["keep"]}
+    assert kept and len(kept) < len(docs)  # the gate cuts both ways here
+    filtered = {r["doc_id"] for r in
+                gopher_signals(df).filter("keep").select("doc_id").collect()}
+    assert filtered == kept
+
+
 def test_gopher_plan_is_map_only(spark):
     df = spark.createDataFrame([(0, "a b c d e")], ["doc_id", "text"])
     plan = gopher_signals(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Python" not in plan
+    # The optimizer pushes `keep` below the signal projection by inlining
+    # every alias: the pushed filter must still build each gram array
+    # once (one sequence() each for g2 and g3), not once per reference.
+    kept = gopher_signals(df).filter("keep")
+    optimized = kept._jdf.queryExecution().optimizedPlan().toString()
+    filters = [ln for ln in optimized.splitlines() if "Filter " in ln]
+    assert len(filters) == 1
+    assert filters[0].count("sequence(") == 2
 
 
 def test_boilerplate_strip_removes_footer_only(spark, sf_dir):

@@ -5,6 +5,9 @@ reference's shipped etl_data.db (text-schema -> CSV-schema bump).
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pytest
 from pyspark.sql import types as T
 
 from dynamic_etl_pipeline_spark.ingest import read_csv, read_txt
@@ -13,6 +16,10 @@ from dynamic_etl_pipeline_spark.schema_registry import SchemaRegistry
 
 def schema_of(*names: str) -> T.StructType:
     return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+
+# the reference app's shipped database; absent outside a reference checkout
+_REFERENCE_DB = Path("/root/reference/etl_data.db")
 
 
 def test_first_registration_is_v1(spark, tmp_path):
@@ -78,7 +85,9 @@ def test_json_schema_export_matches_reference_db(spark, tmp_path):
     import json
     import sqlite3
 
-    con = sqlite3.connect("/root/reference/etl_data.db")
+    if not _REFERENCE_DB.exists():
+        pytest.skip(f"reference database {_REFERENCE_DB} is not present")
+    con = sqlite3.connect(_REFERENCE_DB)
     ref = {
         v: json.loads(s)
         for v, s in con.execute("SELECT version, schema FROM schema_history")

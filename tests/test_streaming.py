@@ -50,6 +50,15 @@ def test_multibatch_tumbling_equals_batch(spark, sf_dir, chunked_events):
     assert got_m == batch_m
 
 
+def test_memory_drain_timeout_raises(spark, chunked_events):
+    """A drain that outlives timeout_s must fail loudly, not hand back
+    whatever partial rows reached the memory table."""
+    directory, schema = chunked_events
+    stream = stream_events_dir(spark, directory, schema, max_files_per_trigger=1)
+    with pytest.raises(TimeoutError):
+        run_available_now_to_memory(tumbling_rollup(stream), timeout_s=0.001)
+
+
 def test_dedup_within_watermark_drops_replays(spark, chunked_events, tmp_path):
     """The same file written twice = a replayed batch; every event_id
     must come out exactly once."""
