@@ -57,12 +57,13 @@ def normalize_event_ts(df: DataFrame, ntz: bool = True) -> DataFrame:
 # ANY scale. This is the production stance the bench ingest path
 # already documents ("schemas are declared, not re-inferred per
 # batch") applied to the fixture catalog: infer once, then declare.
-# The key covers (ADVICE r12): the path's mtime+size (a rewritten
-# fixture invalidates naturally), and every session conf that changes
-# what parquet schema inference reports — nanosAsLong (TIMESTAMP(NANOS)
-# as LongType vs TimestampType), inferTimestampNTZ, binaryAsString,
-# int96AsTimestamp — so sessions with different settings never share
-# an entry.
+# The key covers the newest mtime and the total size over the path
+# and, for a directory table, every file under it (a part file
+# rewritten in place leaves the directory's own mtime alone), and
+# every session conf that changes what parquet schema inference
+# reports — nanosAsLong (TIMESTAMP(NANOS) as LongType vs
+# TimestampType), inferTimestampNTZ, binaryAsString, int96AsTimestamp —
+# so sessions with different settings never share an entry.
 _SCHEMA_CACHE: dict[tuple, "object"] = {}
 
 _INFERENCE_CONFS = (
@@ -77,10 +78,15 @@ def _schema_key(spark: SparkSession, path: str) -> tuple:
     import os
 
     try:
-        st = os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
+        stats = [os.stat(path)]
+        for root, _, files in os.walk(path):
+            stats += [os.stat(os.path.join(root, f)) for f in files]
+        stamp = (max(st.st_mtime_ns for st in stats),
+                 sum(st.st_size for st in stats))
     except OSError:
-        stamp = None  # non-local path (hdfs/s3): conf-only key
+        # non-local path (hdfs/s3): conf-only key, so a remote table
+        # gets no content-based invalidation
+        stamp = None
     confs = tuple(
         spark.conf.get(c, default) for c, default in _INFERENCE_CONFS
     )

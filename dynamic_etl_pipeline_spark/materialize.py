@@ -39,7 +39,16 @@ _MODES = ("local", "disk", "reliable")
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` under the session's configured strategy."""
+    """Materialize ``df`` under the session's configured strategy.
+
+    Callers may read an ``Observation`` attached to ``df`` once an eager
+    call returns. ``obs.get`` blocks until the observed plan's action
+    posts its metrics. All three modes (localCheckpoint, DISK_ONLY
+    count, reliable checkpoint) post them on the pinned Spark 4.x, as
+    the tests verify. A future mode that executes without posting
+    observed metrics would make such a caller HANG rather than error,
+    so re-verify delivery when adding one.
+    """
     mode = df.sparkSession.conf.get(CONF_KEY, "local")
     if mode not in _MODES:
         raise ValueError(

@@ -828,13 +828,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         # costs ZERO extra jobs — the r7 shape still paid one
         # join+limit+count job per round against the previous labels.
         # Same verdict either way: sum(_chg) == 0  <=>  no label moved.
-        # SPARK-VERSION DEPENDENCY (ADVICE r12): obs.get blocks until
-        # the observed plan's action posts metrics; all three
-        # materialize modes (localCheckpoint / DISK_ONLY count /
-        # reliable checkpoint) deliver them on the pinned Spark 4.x
-        # (verified in tests), but a future materialize mode that
-        # executes without posting observed metrics would HANG here
-        # rather than error — re-verify delivery when adding one.
+        # obs.get blocks on metric delivery: see materialize()'s docstring.
         obs = Observation()
         updated = updated.observe(
             obs, F.sum(F.col("_chg").cast("int")).alias("changed")

@@ -272,7 +272,16 @@ def two_level_quantiles(
     computes anyway, so it costs a scheduling round-trip, not an
     extra corpus scan. Parity vs ``F.percentile`` is fuzzed bit-exact
     in tests/test_twolevel.py.
+
+    The ``_tq_`` column prefix is reserved for the operator's own
+    columns: a ``df`` that already has one raises ``ValueError``.
     """
+    clash = [c for c in df.columns if c.startswith("_tq_")]
+    if clash:
+        raise ValueError(
+            f"two_level_quantiles reserves the _tq_ column prefix; "
+            f"rename {clash} first"
+        )
     names = [nm for nm, _ in channels]
     part_cols = list(part_cols)
     gcols = ["_tq_g"] if part_cols else []

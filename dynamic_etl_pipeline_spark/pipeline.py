@@ -7,7 +7,7 @@ per-record validation -> per-record SQLite INSERT (a new connection per
 record, app.py:135 — the measured 955 rec/s bottleneck, BASELINE.md §A).
 
 Engine flow (per batch): read_any (Spark reader) -> extract_patterns
-(codegen regexp) -> SchemaRegistry.register (metadata-only) ->
+(codegen regexp) -> SchemaRegistry.register (no Spark job) ->
 validate + lineage (codegen) -> one partition-parallel parquet append.
 Same semantics, no per-row Python, no per-row transactions — the
 whole pipeline is a single Spark job and scales with partition count.

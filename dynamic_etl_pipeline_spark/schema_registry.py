@@ -18,13 +18,18 @@ semantic); storage is parquet append, not SQLite row-at-a-time.
 
 Scale note: these catalog tables are metadata (rows = number of schema
 versions ever seen). All data-plane work (inference) is delegated to
-Spark's own readers; ``register`` touches only a StructType.
+Spark's own readers. ``register`` schedules no Spark job: a bump
+writes its one catalog row per table as a parquet part file from the
+Spark driver process (pyarrow), under a hidden in-progress name that
+is renamed into place, so the reads below — which do go through
+Spark — never see a partial file.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import json
+import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,7 +52,9 @@ _CHANGES_SCHEMA = T.StructType([
 
 
 def _now() -> _dt.datetime:
-    return _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    # aware: Arrow and Spark both read an aware value as the same
+    # instant, whatever the host's local zone
+    return _dt.datetime.now(_dt.timezone.utc)
 
 
 class SchemaRegistry:
@@ -104,13 +111,31 @@ class SchemaRegistry:
 
     # -- writes -----------------------------------------------------------
 
-    def _append(self, path: str, rows: list, schema: T.StructType) -> None:
-        # one explicit slice: the default createDataFrame splits even a
-        # single row across default-parallelism Python partitions, and a
-        # later coalesce(1) drains all of them through sequential Python
-        # worker round-trips (~5s for a 1-row catalog append)
-        rdd = self.spark.sparkContext.parallelize(rows, 1)
-        self.spark.createDataFrame(rdd, schema).write.mode("append").parquet(path)
+    def _append(self, path: str, row: tuple, schema: T.StructType) -> None:
+        # One row of metadata: a Spark write costs a job and a Python
+        # worker round-trip per table (~0.4 s each on a 4-core local[4]
+        # session) for a few hundred bytes, so the Spark driver process
+        # writes the part file itself. Every field is nullable, as in
+        # every file Spark writes; TimestampType becomes a UTC-adjusted
+        # parquet timestamp, which Spark reads back as TimestampType. A
+        # leading "." hides the file from Spark's file index until the
+        # rename publishes it whole.
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = pa.schema(
+            [f.with_nullable(True) for f in to_arrow_schema(schema)]
+        )
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.fieldNames(), row))], schema=arrow_schema
+        )
+        table_dir = Path(path)
+        table_dir.mkdir(parents=True, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = table_dir / f".{name}.inprogress"
+        pq.write_table(table, tmp)
+        tmp.replace(table_dir / name)
 
     def register(self, schema: T.StructType) -> tuple[int, bool]:
         """Register a batch schema; returns (version, changed).
@@ -127,17 +152,17 @@ class SchemaRegistry:
             if old_fields == new_fields:
                 return version, False
             new_version = version + 1
-            self._append(self.changes_path, [(
+            self._append(self.changes_path, (
                 version, new_version,
                 sorted(new_fields - old_fields),
                 sorted(old_fields - new_fields),
                 _now(),
-            )], _CHANGES_SCHEMA)
+            ), _CHANGES_SCHEMA)
         else:
             new_version = 1
         self._append(
             self.history_path,
-            [(new_version, json.dumps(schema.jsonValue()), _now())],
+            (new_version, json.dumps(schema.jsonValue()), _now()),
             _HISTORY_SCHEMA,
         )
         self._latest = (new_version, schema)

@@ -44,6 +44,20 @@ def test_load_table_schema_cache_hits_and_matches(spark):
     pd.DataFrame({"id": [1, 2, 3], "x": ["a", "b", "c"]}).to_parquet(p)
     k2 = catalog._schema_key(spark, p)
     assert k1 != k2
+    # a part file rewritten IN PLACE inside a directory table leaves
+    # the directory's own mtime alone; the key must still change
+    import os
+
+    d = f"{tmp}/dir_table"
+    os.mkdir(d)
+    part = f"{d}/part-0.parquet"
+    pd.DataFrame({"id": [1, 2, 3]}).to_parquet(part)
+    dir_st = os.stat(d)
+    k3 = catalog._schema_key(spark, d)
+    pd.DataFrame({"id": [1, 2, 3], "x": ["a", "b", "c"]}).to_parquet(part)
+    os.utime(d, ns=(dir_st.st_atime_ns, dir_st.st_mtime_ns))
+    assert os.stat(d).st_mtime_ns == dir_st.st_mtime_ns
+    assert catalog._schema_key(spark, d) != k3
     shutil.rmtree(tmp, ignore_errors=True)
     second = catalog.load_table(spark, SF_DIR, "lineitem")
     assert second.schema == first.schema

@@ -458,6 +458,22 @@ def test_grouped_quantiles_group_cardinality_guard(spark):
     assert out3.count() == 500
 
 
+def test_quantiles_reject_reserved_column_prefix(spark):
+    """``pre`` keeps every caller column beside its own ``_tq_*``
+    aliases, so a caller column with that prefix would be ambiguous or
+    silently shadowed: it must raise before any plan is built."""
+    import pytest
+
+    from dynamic_etl_pipeline_spark.operators.twolevel import (
+        two_level_quantiles,
+    )
+
+    df = spark.range(10).select(
+        F.col("id").cast("double").alias("v"), F.col("id").alias("_tq_v"))
+    with pytest.raises(ValueError, match="_tq_"):
+        two_level_quantiles(df, "v", lambda c: F.floor(c).cast("long"), [0.5])
+
+
 # --------------------------------------------------------------------------
 # join_theta_rank tie-semantics fuzz (r10, VERDICT r9 item 5): the
 # order-statistic theta-join twin hinges on supplier-BEFORE-customer
