@@ -847,10 +847,11 @@ _ARROW_ASSIGN_MIN_CELLS = 2048
 # assignment-closure matrix all grow as k*dim — and the sqrt-k semdedup
 # twin ties k to ceil(sqrt(n)), so at true 100-TB counts this grows
 # with the corpus (448*64 = 28.7k cells at the 100x smoke; ~2M at
-# n=1e9 docs, dim 64). Measured on this host (tools/bench_kmeans_state
-# .py, r11): per-ITERATION driver cost is ~linear in cells — 0.47 s at
-# 28.7k, 1.6 s at 262k, 6.0 s at 1M, 23.8 s at 4.2M cells (collect +
-# mu rebuild), with a 33.6 MB task closure at 4.2M. Above 2^21 cells
+# n=1e9 docs, dim 64). Measured on this host (SCALING.md "kmeans
+# driver-side centroid state", r11): per-ITERATION driver cost is
+# ~linear in cells — 0.47 s at 28.7k, 1.6 s at 262k, 6.0 s at 1M,
+# 23.8 s at 4.2M cells (collect + mu rebuild), with a 33.6 MB task
+# closure at 4.2M. Above 2^21 cells
 # (~12 s/iteration driver-side, ~17 MB closure) — the point where the
 # DRIVER rivals the executors as the per-iteration bottleneck —
 # kmeans_exact_fit auto-switches to the FRAMES state path (r12,
@@ -858,8 +859,8 @@ _ARROW_ASSIGN_MIN_CELLS = 2048
 # to k per-cluster centroid ARRAYS inside Spark (never collected as
 # cells), and assignment reads the matrix from a TorrentBroadcast
 # (shipped once per executor) instead of a per-task closure. Measured
-# crossover curve: tools/bench_kmeans_state.py --frames / SCALING.md
-# r12.
+# crossover curve: SCALING.md "kmeans centroid state DISTRIBUTED"
+# (r12).
 _KMEANS_MAX_STATE_CELLS = 2_097_152
 
 # The frames path's remaining wall is the centroid matrix itself: one
@@ -1193,7 +1194,7 @@ def kmeans_exact_fit(df: DataFrame, n_centroids: int = 8,
             f"{_KMEANS_MAX_BROADCAST_CELLS} (1 GiB of float64 shipped "
             "to every executor + a k-row driver collect per iteration "
             "— the wall inherent to exact Lloyd's assignment; measured "
-            "curve in SCALING.md r12 / tools/bench_kmeans_state.py). "
+            "curve in SCALING.md r12). "
             "Reduce n_centroids or dim, or set "
             "SPARK_GRAFT_ALLOW_KMEANS_STATE=1 to run anyway on the "
             "frames state path."

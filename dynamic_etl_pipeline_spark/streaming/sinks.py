@@ -8,6 +8,21 @@ tests/oracles only.
 ``foreach_batch_parquet`` is the deployment-shaped sink: per-batch
 parquet append keyed by batch_id, idempotent on retry (overwrite of the
 same batch directory), arbitrarily parallel.
+
+The ``maintain_*`` sinks keep an at-rest store up to date and all drain
+through ``_drain_foreach_batch`` (availableNow foreachBatch pass plus
+the fresh-checkpoint guard). Two store shapes recur, each with one
+helper:
+
+- versioned pointer store (``_maintain_versioned``): the full state is
+  rewritten per batch as ``v-<batch_id>`` and committed by an atomic
+  swap of ``CURRENT`` (rollup, keyed CDC, distinct, OLS, scatter);
+- batch-addressed directories (``_batch_dirs``): each batch writes its
+  own ``batch-<id>`` output, replay overwrites it (dedup index, quality
+  split, decay features, dup clusters).
+
+The join view and the IVF index append ``batch_id=<id>`` partitions
+instead.
 """
 
 from __future__ import annotations
@@ -64,31 +79,28 @@ def _check_run_fingerprint(store: Path, checkpoint: str,
 
 
 def _drain_foreach_batch(stream_df: DataFrame, body, checkpoint: str, *,
-                         store_dir: str | None = None,
+                         store_dir: str,
                          on_fresh_checkpoint: str = "error",
                          output_mode: str | None = None,
                          timeout_s: int = 300, what: str = "sink") -> None:
     """The one drain loop every maintain_* sink shares: wrap ``body``
-    with the fresh-checkpoint fingerprint guard (when the sink owns a
-    store), run an availableNow foreachBatch pass, stop the query."""
+    with the fresh-checkpoint fingerprint guard on ``store_dir``, run
+    an availableNow foreachBatch pass, stop the query."""
     if on_fresh_checkpoint not in ("error", "replay"):
         raise ValueError(
             f"on_fresh_checkpoint must be error|replay, "
             f"got {on_fresh_checkpoint!r}"
         )
-    if store_dir is None:
-        guarded = body
-    else:
-        checked = False
+    checked = False
 
-        def guarded(batch_df, batch_id, _body=body):
-            nonlocal checked
-            if not checked:  # once per drain; foreachBatch runs driver-side
-                _check_run_fingerprint(
-                    Path(store_dir), checkpoint, on_fresh_checkpoint, what
-                )
-                checked = True
-            _body(batch_df, batch_id)
+    def guarded(batch_df, batch_id):
+        nonlocal checked
+        if not checked:  # once per drain; foreachBatch runs driver-side
+            _check_run_fingerprint(
+                Path(store_dir), checkpoint, on_fresh_checkpoint, what
+            )
+            checked = True
+        body(batch_df, batch_id)
 
     writer = stream_df.writeStream.foreachBatch(guarded)
     if output_mode is not None:
@@ -105,6 +117,78 @@ def _drain_foreach_batch(stream_df: DataFrame, body, checkpoint: str, *,
             )
     finally:
         q.stop()
+
+
+def _maintain_versioned(stream_df: DataFrame, store_dir: str,
+                        checkpoint: str, step, *, timeout_s: int,
+                        on_fresh_checkpoint: str, what: str) -> DataFrame:
+    """Drain ``stream_df`` into a versioned pointer store and return the
+    final state. ``step(batch_df, prev)`` returns the next FULL state
+    from one micro-batch and the committed state ``prev`` (``None``
+    before the first commit).
+
+    Exactly-once across retries: commits use the atomic-pointer idiom
+    (Delta/Hive-style). Each batch's state is written to its own
+    versioned directory ``v-<batch_id>``; the single commit point is an
+    ``os.replace`` of the ``CURRENT`` pointer file, which is atomic on
+    POSIX. The pointer doubles as the replay marker (a batch id at or
+    below it is skipped), so data and marker can never disagree, and
+    readers always see a complete version — there is no window where
+    the store is absent or half-swapped. A crash after the data write
+    but before the pointer swap leaves an orphan ``v-`` directory that
+    the replayed batch simply overwrites; the previous version is
+    removed only after the swap.
+
+    An empty drain commits nothing and returns an empty frame with the
+    state schema (``step(stream_df, None)`` resolves it on the
+    streaming frame without starting a query).
+    """
+    import os
+    import shutil
+
+    spark = stream_df.sparkSession
+    store = Path(store_dir)
+    pointer = store / "CURRENT"
+
+    def current_version() -> int | None:
+        return int(pointer.read_text()) if pointer.exists() else None
+
+    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
+        last = current_version()
+        if last is not None and last >= batch_id:
+            return  # replayed batch: already committed
+        prev = (
+            None if last is None
+            else spark.read.parquet(str(store / f"v-{last}"))
+        )
+        step(batch_df, prev).write.mode("overwrite").parquet(
+            str(store / f"v-{batch_id}")
+        )
+        tmp = store / f"_CURRENT.tmp-{batch_id}"
+        tmp.write_text(str(batch_id))
+        os.replace(tmp, pointer)  # atomic commit: pointer IS the marker
+        if last is not None:  # post-commit GC; orphans on crash are harmless
+            shutil.rmtree(store / f"v-{last}", ignore_errors=True)
+
+    _drain_foreach_batch(
+        stream_df, commit_batch, checkpoint, store_dir=store_dir,
+        on_fresh_checkpoint=on_fresh_checkpoint,
+        output_mode="update", timeout_s=timeout_s, what=what,
+    )
+    ver = current_version()
+    if ver is None:  # empty stream: nothing ever committed
+        return spark.createDataFrame([], step(stream_df, None).schema)
+    return spark.read.parquet(str(store / f"v-{ver}"))
+
+
+def _batch_dirs(root: Path) -> list[tuple[int, Path]]:
+    """The ``batch-<id>`` directories under ``root`` that hold parquet
+    output, as ``(batch_id, path)`` sorted by NUMERIC batch id (so
+    ``batch-2`` precedes ``batch-10``). A missing root yields none."""
+    return sorted(
+        (int(d.name.split("-", 1)[1]), d) for d in root.glob("batch-*")
+        if any(d.glob("*.parquet"))
+    )
 
 
 def run_available_now_to_memory(stream_df: DataFrame,
@@ -189,75 +273,35 @@ def maintain_incremental_rollup(stream_df: DataFrame, store_dir: str,
     totals at rest make merge order irrelevant, so the maintained view
     is bit-identical to the batch twin.
 
-    Exactly-once across retries: commits use the atomic-pointer idiom
-    (Delta/Hive-style). Each merged batch is written to its own
-    versioned directory ``v-<batch_id>``; the single commit point is an
-    ``os.replace`` of the ``CURRENT`` pointer file, which is atomic on
-    POSIX. The pointer doubles as the replay marker, so data and marker
-    can never disagree, and readers always see a complete version —
-    there is no window where the store is absent or half-swapped. A
-    crash after the data write but before the pointer swap leaves an
-    orphan ``v-`` directory that the replayed batch simply overwrites.
+    Exactly-once across retries via the atomic CURRENT-pointer commit
+    of ``_maintain_versioned``.
 
     Returns the final rollup as a DataFrame (bucket, event_type,
     n_events, total_value DOUBLE) after an availableNow drain.
     """
-    import os
-    import shutil
-    from pathlib import Path
-
     from pyspark.sql import functions as F
-
-    spark = stream_df.sparkSession
-    store = Path(store_dir)
 
     unit = width.split()[-1]  # "1 hour" -> date_trunc('hour', ...)
 
-    def partials(df: DataFrame) -> DataFrame:
-        return df.groupBy(
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        new = batch_df.groupBy(
             F.date_trunc(unit, F.col("ts")).alias("bucket"),
             "event_type",
         ).agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(27,4)")).alias("total_value"),
         )
+        if prev is None:
+            return new
+        return prev.unionByName(new).groupBy("bucket", "event_type").agg(
+            F.sum("n_events").alias("n_events"),
+            F.sum("total_value").cast("decimal(27,4)").alias("total_value"),
+        )
 
-    pointer = store / "CURRENT"
-
-    def current_version() -> int | None:
-        return int(pointer.read_text()) if pointer.exists() else None
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last = current_version()
-        if last is not None and last >= batch_id:
-            return  # replayed batch: already committed
-        new = partials(batch_df)
-        if last is not None:
-            new = (
-                spark.read.parquet(str(store / f"v-{last}"))
-                .unionByName(new)
-                .groupBy("bucket", "event_type")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("total_value")
-                    .cast("decimal(27,4)")
-                    .alias("total_value"),
-                )
-            )
-        vdir = store / f"v-{batch_id}"
-        new.write.mode("overwrite").parquet(str(vdir))
-        tmp = store / f"_CURRENT.tmp-{batch_id}"
-        tmp.write_text(str(batch_id))
-        os.replace(tmp, pointer)  # atomic commit: pointer IS the marker
-        if last is not None:  # post-commit GC; orphans on crash are harmless
-            shutil.rmtree(store / f"v-{last}", ignore_errors=True)
-
-    _drain_foreach_batch(
-        stream_df, merge_batch, checkpoint, store_dir=store_dir,
-        on_fresh_checkpoint=on_fresh_checkpoint,
-        output_mode="update", timeout_s=timeout_s, what="incremental-rollup",
-    )
-    return spark.read.parquet(str(store / f"v-{current_version()}")).select(
+    return _maintain_versioned(
+        stream_df, store_dir, checkpoint, step, timeout_s=timeout_s,
+        on_fresh_checkpoint=on_fresh_checkpoint, what="incremental-rollup",
+    ).select(
         "bucket", "event_type", "n_events",
         F.col("total_value").cast("double").alias("total_value"),
     )
@@ -280,36 +324,21 @@ def maintain_keyed_store(stream_df: DataFrame, store_dir: str,
     collapse. If ``op_col`` is given, rows whose value is ``'D'`` are
     deletes (WHEN MATCHED THEN DELETE); everything else upserts.
 
-    Exactly-once across retries: the maintain_incremental_rollup
-    atomic-pointer idiom — each merged state writes to ``v-<batch_id>``
-    and the single commit point is an os.replace of ``CURRENT``, so the
-    pointer is the replay marker and readers never see a half state.
-    Store cost per batch is |store| + |batch| (one full-outer join on
-    the keys), never accumulated history.
+    Exactly-once across retries via the atomic CURRENT-pointer commit
+    of ``_maintain_versioned``. Store cost per batch is |store| +
+    |batch| (one full-outer join on the keys), never accumulated
+    history.
 
     Returns the final store contents after an availableNow drain.
     """
-    import os
-    import shutil
-    from pathlib import Path
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..operators.merge import merge_upsert
 
-    spark = stream_df.sparkSession
-    store = Path(store_dir)
-    pointer = store / "CURRENT"
     data_cols = [c for c in stream_df.columns if c != op_col]
 
-    def current_version() -> int | None:
-        return int(pointer.read_text()) if pointer.exists() else None
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last = current_version()
-        if last is not None and last >= batch_id:
-            return  # replayed batch: already committed
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         # content-hash tie-break: deterministic under any partitioning
         # (real CDC feeds guarantee unique (key, seq) so it rarely fires)
         w = Window.partitionBy(*keys).orderBy(
@@ -327,31 +356,16 @@ def maintain_keyed_store(stream_df: DataFrame, store_dir: str,
             ).select(*data_cols)
         else:
             deletes, upserts = None, latest.select(*data_cols)
-        if last is None:
-            merged = (
-                upserts if deletes is None
-                else upserts.join(deletes, keys, "left_anti")
-            )
-        else:
-            target = spark.read.parquet(str(store / f"v-{last}"))
-            merged = merge_upsert(target, upserts, keys, deletes=deletes)
-        vdir = store / f"v-{batch_id}"
-        merged.write.mode("overwrite").parquet(str(vdir))
-        tmp = store / f"_CURRENT.tmp-{batch_id}"
-        tmp.write_text(str(batch_id))
-        os.replace(tmp, pointer)  # atomic commit: pointer IS the marker
-        if last is not None:
-            shutil.rmtree(store / f"v-{last}", ignore_errors=True)
+        if prev is not None:
+            return merge_upsert(prev, upserts, keys, deletes=deletes)
+        if deletes is None:
+            return upserts
+        return upserts.join(deletes, keys, "left_anti")
 
-    _drain_foreach_batch(
-        stream_df, apply_batch, checkpoint, store_dir=store_dir,
-        on_fresh_checkpoint=on_fresh_checkpoint,
-        output_mode="update", timeout_s=timeout_s, what="keyed-store",
+    return _maintain_versioned(
+        stream_df, store_dir, checkpoint, step, timeout_s=timeout_s,
+        on_fresh_checkpoint=on_fresh_checkpoint, what="keyed-store",
     )
-    ver = current_version()
-    if ver is None:  # empty stream: nothing ever committed
-        return spark.createDataFrame([], stream_df.select(*data_cols).schema)
-    return spark.read.parquet(str(store / f"v-{ver}"))
 
 
 def maintain_join_view(stream_df: DataFrame, store_dir: str,
@@ -385,7 +399,8 @@ def maintain_join_view(stream_df: DataFrame, store_dir: str,
     never view size. A and B histories here are plain parquet dirs; the
     fixture-scale test reads them whole.
 
-    Returns the view (all join deltas) after an availableNow drain.
+    Returns the view (all join deltas) after an availableNow drain;
+    an empty drain returns the view's columns with no rows.
     """
     import os
     from pathlib import Path
@@ -407,6 +422,17 @@ def maintain_join_view(stream_df: DataFrame, store_dir: str,
             return spark.read.parquet(*[str(p) for p in d.glob("batch_id=*")])
         return spark.createDataFrame([], schema)
 
+    def j(left: DataFrame, right: DataFrame) -> DataFrame:
+        r = right.select(
+            *[F.col(k).alias(f"_r_{k}") for k in on],
+            *[F.col(c).alias(f"{c}_b") for c in payload],
+        )
+        cond = [left[k] == r[f"_r_{k}"] for k in on]
+        return left.join(r, cond).select(
+            *on, *[F.col(c).alias(f"{c}_a") for c in payload],
+            *[f"{c}_b" for c in payload],
+        )
+
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         last = last_done()
         if last is not None and last >= batch_id:
@@ -416,17 +442,6 @@ def maintain_join_view(stream_df: DataFrame, store_dir: str,
         schema = d_a.schema
         a_hist = read_side(store / "a", schema)
         b_hist = read_side(store / "b", schema)
-
-        def j(left: DataFrame, right: DataFrame) -> DataFrame:
-            r = right.select(
-                *[F.col(k).alias(f"_r_{k}") for k in on],
-                *[F.col(c).alias(f"{c}_b") for c in payload],
-            )
-            cond = [left[k] == r[f"_r_{k}"] for k in on]
-            return left.join(r, cond).select(
-                *on, *[F.col(c).alias(f"{c}_a") for c in payload],
-                *[f"{c}_b" for c in payload],
-            )
 
         d_j = (
             j(d_a, b_hist)
@@ -451,10 +466,11 @@ def maintain_join_view(stream_df: DataFrame, store_dir: str,
         on_fresh_checkpoint=on_fresh_checkpoint,
         output_mode="update", timeout_s=timeout_s, what="join-view",
     )
-    jdir = store / "j"
-    paths = [str(p) for p in jdir.glob("batch_id=*")]
-    if not paths:
-        raise ValueError("maintain_join_view: no batches processed")
+    paths = [str(p) for p in (store / "j").glob("batch_id=*")]
+    if not paths:  # empty stream: the view's columns, no rows
+        side = stream_df.select(*data_cols).schema
+        return j(spark.createDataFrame([], side),
+                 spark.createDataFrame([], side))
     return spark.read.parquet(*paths)
 
 
@@ -478,57 +494,30 @@ def maintain_distinct_rollup(stream_df: DataFrame, store_dir: str,
     partition-insensitive — so the streamed estimate equals the batch
     twin exactly (pinned in tests), with ~2% standard error vs truth.
 
-    Same atomic CURRENT-pointer commit as the sum rollup (v-<batch_id>
-    dir + os.replace, pointer doubles as replay marker).
+    Same atomic CURRENT-pointer commit as the sum rollup
+    (``_maintain_versioned``).
 
     Returns (bucket, event_type, distinct_keys_est) after an
     availableNow drain.
     """
-    import os
-    import shutil
-    from pathlib import Path
-
     from pyspark.sql import functions as F
 
-    spark = stream_df.sparkSession
-    store = Path(store_dir)
     unit = width.split()[-1]
-    pointer = store / "CURRENT"
 
-    def partials(df: DataFrame) -> DataFrame:
-        return df.groupBy(
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        new = batch_df.groupBy(
             F.date_trunc(unit, F.col("ts")).alias("bucket"), "event_type"
         ).agg(F.hll_sketch_agg(key_col).alias("sketch"))
+        if prev is None:
+            return new
+        return prev.unionByName(new).groupBy("bucket", "event_type").agg(
+            F.hll_union_agg("sketch").alias("sketch")
+        )
 
-    def current_version() -> int | None:
-        return int(pointer.read_text()) if pointer.exists() else None
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last = current_version()
-        if last is not None and last >= batch_id:
-            return  # replayed batch: already committed
-        new = partials(batch_df)
-        if last is not None:
-            new = (
-                spark.read.parquet(str(store / f"v-{last}"))
-                .unionByName(new)
-                .groupBy("bucket", "event_type")
-                .agg(F.hll_union_agg("sketch").alias("sketch"))
-            )
-        vdir = store / f"v-{batch_id}"
-        new.write.mode("overwrite").parquet(str(vdir))
-        tmp = store / f"_CURRENT.tmp-{batch_id}"
-        tmp.write_text(str(batch_id))
-        os.replace(tmp, pointer)
-        if last is not None:
-            shutil.rmtree(store / f"v-{last}", ignore_errors=True)
-
-    _drain_foreach_batch(
-        stream_df, merge_batch, checkpoint, store_dir=store_dir,
-        on_fresh_checkpoint=on_fresh_checkpoint,
-        output_mode="update", timeout_s=timeout_s, what="distinct-rollup",
-    )
-    return spark.read.parquet(str(store / f"v-{current_version()}")).select(
+    return _maintain_versioned(
+        stream_df, store_dir, checkpoint, step, timeout_s=timeout_s,
+        on_fresh_checkpoint=on_fresh_checkpoint, what="distinct-rollup",
+    ).select(
         "bucket", "event_type",
         F.hll_sketch_estimate("sketch").cast("bigint")
         .alias("distinct_keys_est"),
@@ -599,10 +588,7 @@ def apply_dedup_index_batch(batch_df, batch_id: int, store_dir: str,
     # candidates: new-vs-store (cross-batch) + new-vs-new (in-batch).
     # Exclude THIS batch's own directory from the store read so a
     # replayed batch doesn't pair against its half-written self.
-    older = [
-        str(d) for d in sorted(post_dir.glob("batch-*"))
-        if d.name != f"batch-{batch_id}" and any(d.glob("*.parquet"))
-    ]
+    older = [str(d) for bid, d in _batch_dirs(post_dir) if bid != batch_id]
     new_posts = probe.select(
         F.col("_id").alias("id_b"), "band_id", "band_hash"
     )
@@ -633,8 +619,7 @@ def apply_dedup_index_batch(batch_df, batch_id: int, store_dir: str,
     # verify on signatures: old sigs come from the store, new from this
     # batch (union covers both sides of cross-batch pairs)
     old_sig_dirs = [
-        str(d) for d in sorted(sig_dir.glob("batch-*"))
-        if d.name != f"batch-{batch_id}" and any(d.glob("*.parquet"))
+        str(d) for bid, d in _batch_dirs(sig_dir) if bid != batch_id
     ]
     all_sigs = sigs.select(F.col(id_col).alias("_sid"), "sig")
     if old_sig_dirs:
@@ -688,10 +673,7 @@ def maintain_dedup_index(stream_df, store_dir: str, checkpoint: str,
         on_fresh_checkpoint=on_fresh_checkpoint,
         output_mode=None, timeout_s=timeout_s, what="dedup-index",
     )
-    pair_dirs = [
-        str(d) for d in sorted((Path(store_dir) / "pairs").glob("batch-*"))
-        if any(d.glob("*.parquet"))
-    ]
+    pair_dirs = [str(d) for _, d in _batch_dirs(Path(store_dir) / "pairs")]
     if not pair_dirs:
         from pyspark.sql import types as T
 
@@ -745,8 +727,7 @@ def maintain_quality_split(stream_df, store_dir: str, checkpoint: str,
     )
 
     def _read(side: str):
-        dirs = [str(d) for d in sorted((store / side).glob("batch-*"))
-                if any(d.glob("*.parquet"))]
+        dirs = [str(d) for _, d in _batch_dirs(store / side)]
         if not dirs:
             return spark.createDataFrame([], schema)
         return spark.read.parquet(*dirs)
@@ -776,8 +757,9 @@ def apply_decay_features_batch(batch_df, batch_id: int, store_dir: str,
     Scale note: the tail snapshot is O(users * depth) per batch — the
     right shape while user cardinality is storage-cheap (it is: 20
     BIGINTs per user). Beyond that, the same per-key bounded-buffer
-    state moves into transformWithState/RocksDB (streaming/stateful.py)
-    with this function unchanged as the backfill path.
+    state moves into a RocksDB-backed stateful operator
+    (transformWithState, which needs protobuf) with this function
+    unchanged as the backfill path.
     """
     from pathlib import Path
 
@@ -789,13 +771,7 @@ def apply_decay_features_batch(batch_df, batch_id: int, store_dir: str,
     feat_dir = store / "features"
     tail_dir = store / "tail"
 
-    def _bid(d):
-        return int(d.name.split("-", 1)[1])
-
-    prior = [
-        d for d in sorted(tail_dir.glob("batch-*"), key=_bid)
-        if _bid(d) < batch_id and any(d.glob("*.parquet"))
-    ]
+    prior = [d for bid, d in _batch_dirs(tail_dir) if bid < batch_id]
     cents = F.expr("cast(round(value * 100) as bigint)")
     b = batch_df.select(
         "user_id", "event_id", "ts", cents.alias("cents")
@@ -879,10 +855,7 @@ def maintain_decay_features(stream_df, store_dir: str, checkpoint: str,
         on_fresh_checkpoint=on_fresh_checkpoint,
         output_mode=None, timeout_s=timeout_s, what="decay-feature",
     )
-    feat_dirs = [
-        str(d) for d in sorted((Path(store_dir) / "features").glob("batch-*"))
-        if any(d.glob("*.parquet"))
-    ]
+    feat_dirs = [str(d) for _, d in _batch_dirs(Path(store_dir) / "features")]
     if not feat_dirs:
         from pyspark.sql import types as T
 
@@ -906,7 +879,7 @@ def maintain_ols_trend(stream_df, store_dir: str, checkpoint: str,
     the incremental merge is the SAME union->groupBy->sum shape as
     maintain_incremental_rollup, cost proportional to the group
     cardinality, never to accumulated history. Exactly-once via the
-    same atomic-pointer commit.
+    atomic-pointer commit of ``_maintain_versioned``.
 
     ``anchor_ts`` fixes the x origin (a stream can't know a global min
     up front). The slope rational is mathematically anchor-INVARIANT
@@ -918,64 +891,35 @@ def maintain_ols_trend(stream_df, store_dir: str, checkpoint: str,
     slope_num, slope_den) after an availableNow drain — same schema and
     exact digit-string transport as the batch query.
     """
-    import os
-    import shutil
-    from pathlib import Path
-
     from pyspark.sql import functions as F
 
-    spark = stream_df.sparkSession
-    store = Path(store_dir)
-    pointer = store / "CURRENT"
+    sums = ("n", "sx", "sy", "sxx", "sxy")
 
-    def partials(df):
-        base = df.filter(F.col("value").isNotNull()).select(
+    def step(batch_df, prev):
+        base = batch_df.filter(F.col("value").isNotNull()).select(
             "event_type",
             (F.unix_timestamp("ts")
              - F.unix_timestamp(F.lit(anchor_ts).cast("timestamp"))).alias("x"),
             F.expr("cast(round(value * 100) as bigint)").alias("y"),
         )
         dec = lambda c: F.sum(c.cast("decimal(38,0)"))  # noqa: E731
-        return base.groupBy("event_type").agg(
+        new = base.groupBy("event_type").agg(
             F.count("*").cast("decimal(38,0)").alias("n"),
             dec(F.col("x")).alias("sx"),
             dec(F.col("y")).alias("sy"),
             dec(F.col("x") * F.col("x")).alias("sxx"),
             dec(F.col("x") * F.col("y")).alias("sxy"),
         )
+        if prev is None:
+            return new
+        return prev.unionByName(new).groupBy("event_type").agg(*[
+            F.sum(c).cast("decimal(38,0)").alias(c) for c in sums
+        ])
 
-    def current_version():
-        return int(pointer.read_text()) if pointer.exists() else None
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        last = current_version()
-        if last is not None and last >= batch_id:
-            return  # replayed batch: already committed
-        new = partials(batch_df)
-        if last is not None:
-            new = (
-                spark.read.parquet(str(store / f"v-{last}"))
-                .unionByName(new)
-                .groupBy("event_type")
-                .agg(*[
-                    F.sum(c).cast("decimal(38,0)").alias(c)
-                    for c in ("n", "sx", "sy", "sxx", "sxy")
-                ])
-            )
-        vdir = store / f"v-{batch_id}"
-        new.write.mode("overwrite").parquet(str(vdir))
-        tmp = store / f"_CURRENT.tmp-{batch_id}"
-        tmp.write_text(str(batch_id))
-        os.replace(tmp, pointer)
-        if last is not None:
-            shutil.rmtree(store / f"v-{last}", ignore_errors=True)
-
-    _drain_foreach_batch(
-        stream_df, merge_batch, checkpoint, store_dir=store_dir,
-        on_fresh_checkpoint=on_fresh_checkpoint,
-        output_mode="update", timeout_s=timeout_s, what="OLS-trend",
+    stats = _maintain_versioned(
+        stream_df, store_dir, checkpoint, step, timeout_s=timeout_s,
+        on_fresh_checkpoint=on_fresh_checkpoint, what="OLS-trend",
     )
-    stats = spark.read.parquet(str(store / f"v-{current_version()}"))
     # cast to decimal(10,0) so n * sxy stays inside Spark's 38-digit cap
     # (same finisher as the batch query)
     n10 = F.col("n").cast("decimal(10,0)")
@@ -1045,14 +989,7 @@ def apply_dup_clusters_batch(batch_df, batch_id: int, store_dir: str,
         if any(pair_path.glob("*.parquet")) else None
     )
 
-    prior = [
-        d for d in sorted(
-            labels_dir.glob("batch-*"),
-            key=lambda p: int(p.name.split("-")[1]),
-        )
-        if int(d.name.split("-")[1]) < batch_id
-        and any(d.glob("*.parquet"))
-    ] if labels_dir.exists() else []
+    prior = [d for bid, d in _batch_dirs(labels_dir) if bid < batch_id]
     new_ids = batch_df.select(
         F.col(id_col).alias("id")
     ).distinct().withColumn("component", F.col("id"))
@@ -1121,11 +1058,7 @@ def maintain_dup_clusters(stream_df, store_dir: str, checkpoint: str,
         on_fresh_checkpoint=on_fresh_checkpoint,
         output_mode=None, timeout_s=timeout_s, what="dup-cluster",
     )
-    labels_dir = Path(store_dir) / "labels"
-    snaps = sorted(
-        (d for d in labels_dir.glob("batch-*") if any(d.glob("*.parquet"))),
-        key=lambda p: int(p.name.split("-")[1]),
-    )
+    snaps = [d for _, d in _batch_dirs(Path(store_dir) / "labels")]
     if not snaps:
         from pyspark.sql import types as T
 
@@ -1284,55 +1217,26 @@ def maintain_scatter_stats(stream_df: DataFrame, store_dir: str,
     partials (one map-heavy pass over THAT batch), merged into the
     at-rest store by `union -> groupBy -> sum` over two cell-table-sized
     inputs — cost proportional to d^2, never to accumulated history.
-    Exactly-once via the atomic CURRENT-pointer idiom of
-    maintain_incremental_rollup (the pointer doubles as the replay
-    marker). Returns the final cells frame (i, j, S, nn); feed it to
-    operators/pca.py::pc1_from_cells / project_pc1 for the direction
-    and scores."""
-    import os
-    import shutil
-    from pathlib import Path
-
+    Exactly-once via the atomic CURRENT-pointer commit of
+    ``_maintain_versioned``. Returns the final cells frame (i, j, S,
+    nn); feed it to operators/pca.py::pc1_from_cells / project_pc1 for
+    the direction and scores."""
     from pyspark.sql import functions as F
 
     from ..operators.pca import scatter_cells
 
-    spark = stream_df.sparkSession
-    store = Path(store_dir)
-    store.mkdir(parents=True, exist_ok=True)
-    pointer = store / "CURRENT"
-
-    def current_version() -> int | None:
-        return int(pointer.read_text()) if pointer.exists() else None
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last = current_version()
-        if last is not None and last >= batch_id:
-            return  # replayed batch: already committed
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         new = scatter_cells(
             batch_df, scale=scale, id_col=id_col, vec_col=vec_col
         )
-        if last is not None:
-            new = (
-                spark.read.parquet(str(store / f"v-{last}"))
-                .unionByName(new)
-                .groupBy("i", "j")
-                .agg(
-                    F.sum("S").cast("decimal(38,0)").alias("S"),
-                    F.sum("nn").alias("nn"),
-                )
-            )
-        vdir = store / f"v-{batch_id}"
-        new.write.mode("overwrite").parquet(str(vdir))
-        tmp = store / f"_CURRENT.tmp-{batch_id}"
-        tmp.write_text(str(batch_id))
-        os.replace(tmp, pointer)  # atomic commit: pointer IS the marker
-        if last is not None:  # post-commit GC; orphans on crash are harmless
-            shutil.rmtree(store / f"v-{last}", ignore_errors=True)
+        if prev is None:
+            return new
+        return prev.unionByName(new).groupBy("i", "j").agg(
+            F.sum("S").cast("decimal(38,0)").alias("S"),
+            F.sum("nn").alias("nn"),
+        )
 
-    _drain_foreach_batch(
-        stream_df, merge_batch, checkpoint, store_dir=store_dir,
-        on_fresh_checkpoint=on_fresh_checkpoint,
-        output_mode="update", timeout_s=timeout_s, what="scatter-stats",
+    return _maintain_versioned(
+        stream_df, store_dir, checkpoint, step, timeout_s=timeout_s,
+        on_fresh_checkpoint=on_fresh_checkpoint, what="scatter-stats",
     )
-    return spark.read.parquet(str(store / f"v-{current_version()}"))

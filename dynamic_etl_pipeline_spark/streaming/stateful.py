@@ -81,70 +81,6 @@ def user_running_totals(events: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# The same operator on Spark 4's transformWithStateInPandas — the
-# successor API to applyInPandasWithState: explicit state variables on
-# a handle (value/list/map state, timers, TTL) instead of one opaque
-# tuple, and a RocksDB-backed store.
-
-
-def user_running_totals_tws(events: DataFrame,
-                            watermark: str = "2 hours") -> DataFrame:
-    """Twin of user_running_totals on the transformWithState API.
-
-    Requires the RocksDB state-store provider (tests set it per-run)
-    AND the ``protobuf`` Python package (the API's state-server wire
-    format) — absent protobuf, raises NotImplementedError up front
-    instead of crashing the streaming Python worker mid-query.
-    Functionally identical output: one (user_id, n_events,
-    total_value) row per user per micro-batch.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package "
-            "(not installed in this environment); use "
-            "user_running_totals (applyInPandasWithState) instead"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", _STATE
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            existing = self._totals.get()
-            n, cents = existing if existing is not None else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(pdf["_cents"].fillna(0).sum())
-            self._totals.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n],
-                 "total_value": [float(cents) / _VALUE_SCALE]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        _with_cents(events).withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=_OUT,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # Timeout-driven stateful sessionization (round 4): the canonical
 # custom-state operator — the session CLOSES when the event-time
 # watermark passes last_event + gap, i.e. the state itself decides

@@ -16,6 +16,7 @@ idempotent re-drain the older tests exercise.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import os
 import shutil
 import time as _time
@@ -99,46 +100,39 @@ def _vec_rows(ids):
             for i in ids]
 
 
-def _drain_rollup(spark, feed, store, ck, **kw):
+def _run_rollup(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.streaming.sinks import (
         maintain_incremental_rollup,
     )
 
-    got = maintain_incremental_rollup(
+    return maintain_incremental_rollup(
         _stream(spark, feed, _EVENTS), str(store), str(ck), **kw)
-    return {(r["bucket"], r["event_type"]): (r["n_events"], r["total_value"])
-            for r in got.collect()}
 
 
-def _drain_distinct(spark, feed, store, ck, **kw):
+def _run_distinct(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.streaming.sinks import (
         maintain_distinct_rollup,
     )
 
-    got = maintain_distinct_rollup(
+    return maintain_distinct_rollup(
         _stream(spark, feed, _EVENTS), str(store), str(ck), **kw)
-    return {(r["bucket"], r["event_type"]): r["distinct_keys_est"]
-            for r in got.collect()}
 
 
-def _drain_ols(spark, feed, store, ck, **kw):
+def _run_ols(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.streaming.sinks import maintain_ols_trend
 
-    got = maintain_ols_trend(
+    return maintain_ols_trend(
         _stream(spark, feed, _EVENTS), str(store), str(ck),
         "2024-01-01 00:00:00", **kw)
-    return {r["event_type"]: tuple(r) for r in got.collect()}
 
 
-def _drain_decay(spark, feed, store, ck, **kw):
+def _run_decay(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.streaming.sinks import (
         maintain_decay_features,
     )
 
-    got = maintain_decay_features(
+    return maintain_decay_features(
         _stream(spark, feed, _EVENTS), str(store), str(ck), **kw)
-    return {(r["user_id"], r["event_id"]): (r["n_terms"], r["decayed_sum"])
-            for r in got.collect()}
 
 
 _CDC = "k long, val string, seq long, op string"
@@ -152,13 +146,12 @@ _CDC_B = [
 ]
 
 
-def _drain_keyed(spark, feed, store, ck, **kw):
+def _run_keyed(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.streaming.sinks import maintain_keyed_store
 
-    got = maintain_keyed_store(
+    return maintain_keyed_store(
         _stream(spark, feed, _CDC), str(store), str(ck),
         keys=["k"], seq_col="seq", op_col="op", **kw)
-    return {(r["k"], r["val"], r["seq"]) for r in got.collect()}
 
 
 _JV = "side string, k long, v string"
@@ -171,33 +164,30 @@ _JV_B = [
 ]
 
 
-def _drain_joinview(spark, feed, store, ck, **kw):
+def _run_joinview(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.streaming.sinks import maintain_join_view
 
-    got = maintain_join_view(
+    return maintain_join_view(
         _stream(spark, feed, _JV), str(store), str(ck),
         side_col="side", on=["k"], **kw)
-    return {(r["k"], r["v_a"], r["v_b"]) for r in got.collect()}
 
 
-def _drain_dedup(spark, feed, store, ck, **kw):
+def _run_dedup(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.streaming.sinks import maintain_dedup_index
 
-    got = maintain_dedup_index(
+    return maintain_dedup_index(
         _stream(spark, feed, _DOCS), str(store), str(ck),
         threshold=0.4, **kw)
-    return {(r["id_a"], r["id_b"]) for r in got.collect()}
 
 
-def _drain_dupclusters(spark, feed, store, ck, **kw):
+def _run_dupclusters(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.streaming.sinks import (
         maintain_dup_clusters,
     )
 
-    got = maintain_dup_clusters(
+    return maintain_dup_clusters(
         _stream(spark, feed, _DOCS), str(store), str(ck),
         threshold=0.4, **kw)
-    return {(r["id"], r["component"]) for r in got.collect()}
 
 
 _RECS = "rec_id long, content string"
@@ -205,7 +195,7 @@ _RECS_A = [[(1, "fine"), (2, None)]]
 _RECS_B = [[(3, "ok"), (4, None)]]
 
 
-def _drain_quality(spark, feed, store, ck, **kw):
+def _run_quality(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.quality import validate
     from dynamic_etl_pipeline_spark.streaming.sinks import (
         maintain_quality_split,
@@ -216,12 +206,10 @@ def _drain_quality(spark, feed, store, ck, **kw):
         T.StructField("content", T.StringType()),
     ])
     stream = validate(_stream(spark, feed, _RECS), schema)
-    good, bad = maintain_quality_split(stream, str(store), str(ck), **kw)
-    return (frozenset(r["rec_id"] for r in good.collect()),
-            frozenset(r["rec_id"] for r in bad.collect()))
+    return maintain_quality_split(stream, str(store), str(ck), **kw)
 
 
-def _drain_ivf(spark, feed, store, ck, **kw):
+def _run_ivf(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.streaming.sinks import (
         init_ivf_stream_index,
         maintain_ivf_index,
@@ -230,41 +218,73 @@ def _drain_ivf(spark, feed, store, ck, **kw):
     if not (store / "centroids").exists():
         boot = spark.createDataFrame(_vec_rows(range(100, 120)), _VECS)
         init_ivf_stream_index(boot, str(store), n_centroids=2)
-    maintain_ivf_index(_stream(spark, feed, _VECS), str(store), str(ck), **kw)
-    return {(r["vec_id"], r["list_id"])
-            for r in spark.read.parquet(str(store / "lists")).collect()}
+    return maintain_ivf_index(
+        _stream(spark, feed, _VECS), str(store), str(ck), **kw)
 
 
-def _drain_scatter(spark, feed, store, ck, **kw):
+def _run_scatter(spark, feed, store, ck, **kw):
     from dynamic_etl_pipeline_spark.streaming.sinks import (
         maintain_scatter_stats,
     )
 
-    got = maintain_scatter_stats(
+    return maintain_scatter_stats(
         _stream(spark, feed, _VECS), str(store), str(ck), **kw)
-    return {(r["i"], r["j"]): (int(r["S"]), r["nn"]) for r in got.collect()}
 
 
+# sink -> (schema, batches_a, batches_b, run, row): ``run`` drains and
+# returns what the sink returns; ``row`` maps one result row to the
+# hashable form the snapshot compares
 _SPECS = {
-    "incremental_rollup": (_EVENTS, _EVENTS_A, _EVENTS_B, _drain_rollup),
-    "distinct_rollup": (_EVENTS, _EVENTS_A, _EVENTS_B, _drain_distinct),
-    "ols_trend": (_EVENTS, _EVENTS_A, _EVENTS_B, _drain_ols),
-    "decay_features": (_EVENTS, _EVENTS_A, _EVENTS_B, _drain_decay),
-    "keyed_store": (_CDC, _CDC_A, _CDC_B, _drain_keyed),
-    "join_view": (_JV, _JV_A, _JV_B, _drain_joinview),
-    "dedup_index": (_DOCS, _DOCS_A, _DOCS_B, _drain_dedup),
-    "dup_clusters": (_DOCS, _DOCS_A, _DOCS_B, _drain_dupclusters),
-    "quality_split": (_RECS, _RECS_A, _RECS_B, _drain_quality),
+    "incremental_rollup": (
+        _EVENTS, _EVENTS_A, _EVENTS_B, _run_rollup,
+        lambda r: (r["bucket"], r["event_type"], r["n_events"],
+                   r["total_value"])),
+    "distinct_rollup": (
+        _EVENTS, _EVENTS_A, _EVENTS_B, _run_distinct,
+        lambda r: (r["bucket"], r["event_type"], r["distinct_keys_est"])),
+    "ols_trend": (_EVENTS, _EVENTS_A, _EVENTS_B, _run_ols, tuple),
+    "decay_features": (
+        _EVENTS, _EVENTS_A, _EVENTS_B, _run_decay,
+        lambda r: (r["user_id"], r["event_id"], r["n_terms"],
+                   r["decayed_sum"])),
+    "keyed_store": (_CDC, _CDC_A, _CDC_B, _run_keyed,
+                    lambda r: (r["k"], r["val"], r["seq"])),
+    "join_view": (_JV, _JV_A, _JV_B, _run_joinview,
+                  lambda r: (r["k"], r["v_a"], r["v_b"])),
+    "dedup_index": (_DOCS, _DOCS_A, _DOCS_B, _run_dedup,
+                    lambda r: (r["id_a"], r["id_b"])),
+    "dup_clusters": (_DOCS, _DOCS_A, _DOCS_B, _run_dupclusters,
+                     lambda r: (r["id"], r["component"])),
+    "quality_split": (_RECS, _RECS_A, _RECS_B, _run_quality,
+                      lambda r: r["rec_id"]),
     "ivf_index": (_VECS, [_vec_rows(range(0, 6))], [_vec_rows(range(6, 12))],
-                  _drain_ivf),
+                  _run_ivf, lambda r: (r["vec_id"], r["list_id"])),
     "scatter_stats": (_VECS, [_vec_rows(range(0, 6))],
-                      [_vec_rows(range(6, 12))], _drain_scatter),
+                      [_vec_rows(range(6, 12))], _run_scatter,
+                      lambda r: (r["i"], r["j"], int(r["S"]), r["nn"])),
 }
+
+
+def _frames(got):
+    """The frames a sink returned: none (IVF), one, or a tuple."""
+    if got is None:
+        return ()
+    return got if isinstance(got, tuple) else (got,)
+
+
+def _drain(sink, spark, feed, store, ck, **kw):
+    """Drain ``feed`` through ``sink`` and return a canonical snapshot
+    of its result (the IVF sink returns nothing: its store is read)."""
+    _, _, _, run, row = _SPECS[sink]
+    got = run(spark, feed, store, ck, **kw)
+    frames = _frames(got) or (spark.read.parquet(str(store / "lists")),)
+    return tuple(frozenset(row(r) for r in f.collect()) for f in frames)
 
 
 @pytest.mark.parametrize("sink", sorted(_SPECS))
 def test_kill_and_redrain_equals_oneshot(spark, tmp_path, sink):
-    schema, batches_a, batches_b, drain = _SPECS[sink]
+    schema, batches_a, batches_b, _, _ = _SPECS[sink]
+    drain = functools.partial(_drain, sink)
 
     feed = tmp_path / "feed"
     store = tmp_path / "store"
@@ -291,7 +311,8 @@ def test_fresh_checkpoint_over_existing_store_fails_loudly(
     clobber (batch-id sinks) or skip (pointer sinks) — default errors,
     explicit on_fresh_checkpoint='replay' allows the deliberate
     re-drain."""
-    schema, batches_a, _, drain = _SPECS[sink]
+    schema, batches_a, _, _, _ = _SPECS[sink]
+    drain = functools.partial(_drain, sink)
 
     feed = tmp_path / "feed"
     store = tmp_path / "store"
@@ -303,3 +324,42 @@ def test_fresh_checkpoint_over_existing_store_fails_loudly(
     again = drain(spark, feed, store, tmp_path / "ck_fresh2",
                   on_fresh_checkpoint="replay")
     assert again == first
+
+
+@pytest.mark.parametrize("sink", sorted(_SPECS))
+def test_empty_feed_drains_to_empty_result(spark, tmp_path, sink):
+    """Draining a feed with no files commits no batch: the sink returns
+    empty frame(s) with the same columns a non-empty drain returns,
+    instead of raising."""
+    schema, batches_a, _, run, _ = _SPECS[sink]
+
+    empty_feed = tmp_path / "empty_feed"
+    empty_feed.mkdir()
+    got = run(spark, empty_feed, tmp_path / "store0", tmp_path / "ck0")
+
+    feed = tmp_path / "feed"
+    _append_files(spark, feed, schema, batches_a)
+    full = run(spark, feed, tmp_path / "store1", tmp_path / "ck1")
+
+    assert len(_frames(got)) == len(_frames(full))
+    for g, f in zip(_frames(got), _frames(full)):
+        assert g.columns == f.columns
+        assert g.count() == 0
+
+
+def test_batch_dirs_numeric_order_skips_dirs_without_parquet(tmp_path):
+    from dynamic_etl_pipeline_spark.streaming.sinks import _batch_dirs
+
+    for bid in (10, 2, 1):
+        d = tmp_path / f"batch-{bid}"
+        d.mkdir()
+        (d / "part-00000.parquet").touch()
+    (tmp_path / "batch-3").mkdir()  # crashed before its first file
+    (tmp_path / "batch-3" / "_temporary").mkdir()
+
+    assert _batch_dirs(tmp_path) == [
+        (1, tmp_path / "batch-1"),
+        (2, tmp_path / "batch-2"),
+        (10, tmp_path / "batch-10"),
+    ]
+    assert _batch_dirs(tmp_path / "missing") == []

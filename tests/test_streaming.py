@@ -459,63 +459,6 @@ def test_quality_split_routes_bad_records_to_dlq(spark, tmp_path):
     assert good.count() + bad.count() == len(rows)
 
 
-def test_transform_with_state_matches_apply_in_pandas_twin(spark, sf_dir,
-                                                           chunked_events):
-    """The transformWithState (RocksDB store) running totals must end at
-    the same per-user state as the applyInPandasWithState twin and the
-    batch aggregate."""
-    from dynamic_etl_pipeline_spark.streaming.stateful import (
-        user_running_totals_tws,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        directory, schema = chunked_events
-        stream = stream_events_dir(spark, directory, schema)
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            user_running_totals_tws(stream)
-        pytest.skip("protobuf unavailable: transformWithState gated off")
-
-    directory, schema = chunked_events
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = stream_events_dir(spark, directory, schema,
-                                   max_files_per_trigger=1)
-        drained = run_available_now_to_memory(
-            user_running_totals_tws(stream), output_mode="update"
-        )
-        # update mode re-emits per batch: keep the LAST row per user
-        # (max n_events is monotone)
-        got = {}
-        for r in drained.collect():
-            cur = got.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                got[r["user_id"]] = (r["n_events"], round(r["total_value"], 4))
-
-        batch = (
-            load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.col("value").cast("decimal(27,4)"))
-                 .cast("double").alias("t"))
-        )
-        want = {r["user_id"]: (r["n"], round(r["t"], 4))
-                for r in batch.collect()}
-        assert got == want
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
-
-
 def test_dedup_index_equals_batch_lsh_twin(spark, tmp_path):
     """Streaming-twin equivalence for the near-dup index: draining a
     3-batch corpus through the incremental index must find exactly the
