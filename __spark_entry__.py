@@ -181,7 +181,7 @@ _FRONT = [
     # struct band keys), the stateful tier's heaviest drain
     # (streaming_stateful_sessions, never sampled, r13-profiled), the
     # never-sampled inner stream-stream join + the left variant, and
-    # the applyInPandasWithState running totals
+    # the update-mode running totals
     "streaming_minhash_index", "streaming_stateful_sessions",
     "streaming_stream_stream_join",
     "streaming_stream_stream_left_join", "streaming_user_running_totals",

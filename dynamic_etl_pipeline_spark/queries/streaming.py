@@ -5,13 +5,13 @@ availableNow trigger, memory sink in complete mode) and returns the
 drained result. Because the windowed aggregations are the same logical
 plans as their batch twins in queries/events.py, the streaming results
 are held to full DuckDB oracles — not just rows-only checks. The
-custom applyInPandasWithState tier carries oracles too: the
-EventTimeTimeout sessionizer's finalization equals the batch
-lag/cumsum sessionizer, and since round 5 the running-totals op
-accumulates integer fixed-point state, so its drain bit-matches the
-batch DECIMAL aggregate; streaming_scatter_pc1 drains through the
-incremental scatter sink and inherits the batch PC1 oracle unchanged
-(additive integer sufficient statistics).
+running per-user totals are a native update-mode aggregate whose
+decimal state sum bit-matches the batch DECIMAL aggregate. The custom
+applyInPandasWithState sessionizer carries an oracle too: its
+EventTimeTimeout finalization equals the batch lag/cumsum sessionizer.
+streaming_scatter_pc1 drains through the incremental scatter sink and
+inherits the batch PC1 oracle unchanged (additive integer sufficient
+statistics).
 
 Multi-batch semantics (watermark-delayed emission, state across
 triggers, dedup of replayed keys) are exercised in
@@ -31,10 +31,10 @@ from ..streaming.rollups import (
     session_counts,
     sliding_avg,
     tumbling_rollup,
+    user_running_totals,
 )
 from ..streaming.sinks import run_available_now_to_memory
 from ..streaming.source import stream_events
-from ..streaming.stateful import user_running_totals
 from .registry import query
 
 
@@ -338,11 +338,10 @@ FROM events
 GROUP BY user_id
 """)
 def streaming_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom per-key state via applyInPandasWithState: cumulative
-    per-user counts/totals, emitted per trigger.
+    """Cumulative per-user counts/totals as a native update-mode
+    aggregate, emitted per trigger.
 
-    Exact oracle since round 5: the state accumulates value as integer
-    1e-4 fixed-point (scaled JVM-side by a decimal cast), so the total
+    Exact oracle: the state sums value as DECIMAL(27,4), so the total
     is order-independent and the final emission per user — the fixture
     is a single file, hence one availableNow micro-batch — bit-matches
     the batch DECIMAL aggregate in any engine."""
@@ -698,8 +697,7 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay pushes the watermark past every real event so all sessions
     finalize, making the drain equal to the batch lag/cumsum
     sessionizer — a FULL oracle on an applyInPandasWithState operator
-    (the running-totals one stays rows-only because float accumulation
-    order differs; sessions are pure integer boundaries)."""
+    (sessions are pure integer boundaries)."""
     import shutil
 
     from pyspark.sql import functions as F

@@ -20,8 +20,8 @@ from .rollups import (  # noqa: F401
     session_counts,
     sliding_avg,
     tumbling_rollup,
+    user_running_totals,
 )
-from .stateful import user_running_totals  # noqa: F401
 from .sinks import (  # noqa: F401
     FreshCheckpointError,
     foreach_batch_parquet,

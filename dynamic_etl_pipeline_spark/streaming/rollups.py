@@ -8,6 +8,9 @@ State sizing at scale: the watermark bounds how many windows stay open
 per key, so state is O(open_windows x keys) regardless of stream
 length; late rows beyond the watermark are dropped instead of growing
 state.
+
+``user_running_totals`` is the one unwindowed aggregate here: keyed by
+user alone, its state is one row per user.
 """
 
 from __future__ import annotations
@@ -21,6 +24,21 @@ def dsum(col: str) -> Column:
     contract as queries/_helpers.dsum; duplicated here because queries/
     imports this module — importing back would be circular)."""
     return F.sum(F.col(col).cast("decimal(27,4)")).cast("double")
+
+
+def user_running_totals(events: DataFrame) -> DataFrame:
+    """Cumulative per-user event count + value total, emitted once per
+    user per micro-batch in update mode (batch equivalent after a full
+    replay: the same groupBy; DuckDB oracle:
+    CAST(sum(CAST(value AS DECIMAL(27,4))) AS DOUBLE)).
+
+    Keyed without event time, so no watermark applies: the state holds
+    one row per user for the life of the stream. The decimal state sum
+    is exact and order-independent, and the DOUBLE cast rounds once."""
+    return events.groupBy("user_id").agg(
+        F.count("*").alias("n_events"),
+        dsum("value").alias("total_value"),
+    )
 
 
 def tumbling_rollup(events: DataFrame, width: str = "1 hour",

@@ -1,10 +1,16 @@
-"""Custom stateful streaming operators via applyInPandasWithState
-(SURVEY §2.9/§2.11): arbitrary per-key state the built-in windowed
-aggregations can't express.
+"""The custom-state streaming operator: timeout-driven sessionization
+via applyInPandasWithState (SURVEY §2.9/§2.11).
 
-State is partitioned by key across executors, so throughput scales
-with the cluster; each micro-batch touches only the keys present in
-that batch.
+The session CLOSES when the event-time watermark passes
+last_event + gap, i.e. the state itself decides when to emit, which no
+built-in windowed aggregation expresses (session_window comes close
+but cannot carry arbitrary per-session state or emit custom
+finalization records). State is partitioned by key across executors;
+each micro-batch touches only the keys present in that batch.
+
+Per-key state that a native aggregate can hold stays native: the
+running per-user totals are an update-mode ``groupBy().agg()`` in
+streaming/rollups.py::user_running_totals.
 """
 
 from __future__ import annotations
@@ -14,79 +20,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType, DoubleType, LongType, StringType, StructField, StructType,
-)
-
-_OUT = StructType([
-    StructField("user_id", LongType()),
-    StructField("n_events", LongType()),
-    StructField("total_value", DoubleType()),
-])
-_STATE = StructType([
-    StructField("n", LongType()),
-    StructField("cents", LongType()),
-])
-
-# Fixed-point scale for the value accumulator. State holds the total as
-# an integer number of 1e-4 units, so accumulation is exact and
-# order-independent — double addition in arrival order would make the
-# emitted total depend on shuffle order (and diverge from any oracle in
-# the last ulp). The scaling happens JVM-side (decimal cast * 10^4) so
-# the pandas worker only ever sums int64.
-_VALUE_SCALE = 10_000
-
-
-def _update(key: tuple, pdfs: Iterator[pd.DataFrame],
-            state: GroupState) -> Iterator[pd.DataFrame]:
-    n, cents = state.get if state.exists else (0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        cents += int(pdf["_cents"].fillna(0).sum())
-    state.update((n, cents))
-    # int/int true division in Python is correctly rounded at ANY
-    # magnitude (CPython computes it over the exact big-int ratio), so
-    # this is the single rounding a DECIMAL engine performs for
-    # CAST(cents/10^4 AS DOUBLE). float(cents)/SCALE would round twice
-    # once |cents| >= 2^53 (ADVICE r5) — pinned in
-    # tests/test_streaming.py::test_cents_division_single_rounding.
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n],
-         "total_value": [cents / _VALUE_SCALE]}
-    )
-
-
-def _with_cents(events: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    return events.withColumn(
-        "_cents",
-        (F.col("value").cast("decimal(27,4)") * _VALUE_SCALE).cast("long"),
-    )
-
-
-def user_running_totals(events: DataFrame,
-                        watermark: str = "2 hours") -> DataFrame:
-    """Cumulative per-user event count + value total, emitted once per
-    user per micro-batch — running state no windowed agg expresses
-    (batch equivalent after a full replay: plain groupBy sum/count;
-    DuckDB oracle: CAST(sum(CAST(value AS DECIMAL(27,4))) AS DOUBLE))."""
-    return (
-        _with_cents(events).withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update, _OUT, _STATE, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Timeout-driven stateful sessionization (round 4): the canonical
-# custom-state operator — the session CLOSES when the event-time
-# watermark passes last_event + gap, i.e. the state itself decides
-# when to emit, which no built-in windowed aggregation expresses
-# (session_window comes close but cannot carry arbitrary per-session
-# state or emit custom finalization records).
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 _SESS_OUT = StructType([
     StructField("user_id", LongType()),

@@ -594,27 +594,6 @@ def test_empty_regex_split_has_no_trailing_empty(spark):
 # ---- round-10 ADVICE items ------------------------------------------------
 
 
-def test_stateful_floor_tool_accepts_both_flag_forms():
-    """ADVICE r10: usage documented '--runs N' but only '--runs=N'
-    parsed — a bare '--runs N' raised IndexError and N was consumed as
-    the positional sf_dir. Both forms must now parse identically."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-    from bench_stateful_floor import parse_args
-
-    eq = parse_args(["/tmp/x", "--runs=5", "--batch-sizes=1,2"])
-    sp = parse_args(["/tmp/x", "--runs", "5", "--batch-sizes", "1,2"])
-    assert eq == sp == ("/tmp/x", 5, [1, 2])
-    # defaults + positional-only still work
-    assert parse_args([])[1:] == (2, [10_000, 100_000])
-    import pytest
-
-    with pytest.raises(SystemExit):
-        parse_args(["--runs"])  # dangling flag: loud, not IndexError
-
-
 def test_group_cardinality_error_names_real_trip_point(spark):
     """ADVICE r10: the error message understated the bound (trip point
     is max_groups*1.1, message said max_groups). It must now name the

@@ -13,14 +13,15 @@ from pyspark.sql import functions as F
 from dynamic_etl_pipeline_spark.catalog import load_table
 from dynamic_etl_pipeline_spark.streaming.rollups import (
     dedup_within_watermark,
+    dsum,
     tumbling_rollup,
+    user_running_totals,
 )
 from dynamic_etl_pipeline_spark.streaming.sinks import (
     foreach_batch_parquet,
     run_available_now_to_memory,
 )
 from dynamic_etl_pipeline_spark.streaming.source import stream_events_dir
-from dynamic_etl_pipeline_spark.streaming.stateful import user_running_totals
 
 
 @pytest.fixture(scope="module")
@@ -79,7 +80,8 @@ def test_dedup_within_watermark_drops_replays(spark, chunked_events, tmp_path):
 
 def test_stateful_running_totals_accumulate(spark, sf_dir, chunked_events):
     """update-mode state emits once per user per batch it appears in;
-    the LAST emission per user must equal the full batch aggregate."""
+    the LAST emission per user (the one with the largest running count)
+    must equal the full batch aggregate, total_value bit for bit."""
     directory, schema = chunked_events
     stream = stream_events_dir(spark, directory, schema, max_files_per_trigger=1)
     got = run_available_now_to_memory(
@@ -88,16 +90,33 @@ def test_stateful_running_totals_accumulate(spark, sf_dir, chunked_events):
     # >1 batch => users appearing in several batches emit several rows
     assert got.count() > got.select("user_id").distinct().count()
 
-    final = (
-        got.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
+    final = got.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max_by("total_value", "n_events").alias("total_value"),
     )
     batch = (
         load_table(spark, sf_dir, "events")
-        .groupBy("user_id").agg(F.count("*").alias("n_events"))
+        .groupBy("user_id")
+        .agg(F.count("*").alias("n_events"),
+             dsum("value").alias("total_value"))
     )
-    got_m = {r["user_id"]: r["n_events"] for r in final.collect()}
-    batch_m = {r["user_id"]: r["n_events"] for r in batch.collect()}
+    got_m = {r["user_id"]: (r["n_events"], r["total_value"])
+             for r in final.collect()}
+    batch_m = {r["user_id"]: (r["n_events"], r["total_value"])
+               for r in batch.collect()}
     assert got_m == batch_m
+
+
+def test_running_totals_plan_has_no_python_state(spark, chunked_events):
+    """The running totals are Spark's own update-mode aggregate: no
+    per-group Python call (FlatMapGroupsInPandasWithState) is planned."""
+    directory, schema = chunked_events
+    stream = stream_events_dir(spark, directory, schema, max_files_per_trigger=1)
+    plan = (
+        user_running_totals(stream)._jdf.queryExecution().analyzed().toString()
+    )
+    assert "Aggregate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
 
 
 def test_foreach_batch_parquet_sink(spark, chunked_events, tmp_path):
@@ -1309,16 +1328,17 @@ def test_streaming_scatter_stats_bit_exact_vs_batch_pc1(spark, sf_dir,
     } == want_cells
 
 
-def test_cents_division_single_rounding():
-    """ADVICE r5: the stateful emitter's cents -> double conversion must
-    round ONCE, like CAST(sum(DECIMAL)/10^4 AS DOUBLE). Python int/int
-    true division is correctly rounded at any magnitude; the old
-    float(cents)/SCALE double-rounded past 2^53 — witness value pinned."""
+def test_running_total_sum_rounds_once(spark):
+    """The running total is CAST(sum(DECIMAL(27,4)) AS DOUBLE): one
+    correctly rounded conversion of the exact decimal, even past 2^53
+    units of 1e-4 where a double intermediate would round twice."""
     from fractions import Fraction
 
-    from dynamic_etl_pipeline_spark.streaming.stateful import _VALUE_SCALE
-
-    cents = 9007199254740995  # 2^53 + 3: float(cents) already rounds
-    want = float(Fraction(cents, _VALUE_SCALE))  # exact ratio, one rounding
-    assert cents / _VALUE_SCALE == want
-    assert float(cents) / _VALUE_SCALE != want  # the bug the fix removes
+    units = 9007199254740995  # 2^53 + 3 ten-thousandths
+    one_row = spark.sql(
+        "SELECT CAST('900719925474.0995' AS DECIMAL(27,4)) AS value"
+    )
+    got = one_row.agg(dsum("value").alias("t")).first()["t"]
+    want = float(Fraction(units, 10**4))  # exact ratio, one rounding
+    assert got == want
+    assert float(units) / 10**4 != want  # the double-rounded value

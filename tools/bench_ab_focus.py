@@ -1,22 +1,24 @@
-"""Focused alternating-session A/B of a NAMED QUERY SUBSET between two
-git revisions (VERDICT r10 item 1).
+"""Alternating-session A/B of headline queries between two git
+revisions.
 
-tools/bench_compare.py runs the whole 57-query headline set, which is
-the right shape for a round-level regression gate but wasteful when the
-question is "are these two specific movers real or fat-tail noise?" —
-each extra query adds session wall-clock without adding signal for the
-queries under test. This tool checks out both revisions into temp
-worktrees and runs ONLY the named queries, in alternating subprocess
-sessions (A B A B ...) exactly like bench_compare, so host drift lands
-on both sides equally. More sessions on fewer queries = a per-query
-median that actually resolves a 1.2-1.3x question.
+Cross-round bench deltas are noise-limited on a drifting host, so this
+tool checks both revisions out into temp worktrees and runs the
+queries in ALTERNATING subprocess sessions (A B A B ...), so slow host
+drift lands on both revisions equally. Per revision it reports the
+per-query MEDIAN of the per-session best-of-N, the A/B ratio and the
+totals over the queries both revisions define.
+
+By default it runs the whole bench.HEADLINE set, the round-level
+regression gate. ``--queries a,b`` narrows it to named movers: more
+sessions on fewer queries give a per-query median that resolves a
+1.2-1.3x question without paying session wall-clock for the rest.
 
 The per-session runner is injected via stdin (python - <<script) with
 cwd at the worktree, so it needs nothing to exist at the old revision
 beyond the package itself.
 
 Usage:
-  python tools/bench_ab_focus.py REV_A [REV_B] --queries a,b
+  python tools/bench_ab_focus.py REV_A [REV_B] [--queries a,b]
       [--sessions 5] [--runs 3] [--sf-dir /root/testdata/sf0.1]
       [--out BENCH_AB_FOCUS_rNN.json]
 REV_B defaults to the current working tree (run in place, uncommitted
@@ -37,6 +39,7 @@ sys.path.insert(0, ".")
 names = json.loads(sys.argv[1]); sf_dir = sys.argv[2]; runs = int(sys.argv[3])
 from dynamic_etl_pipeline_spark.session import get_spark
 from dynamic_etl_pipeline_spark.queries import QUERIES
+names = [n for n in names if n in QUERIES]  # older revisions lack some
 from pyspark.sql import functions as F
 spark = get_spark("ab-focus")
 spark.range(64).repartition(32).select(
@@ -82,14 +85,20 @@ def main() -> int:
     p = argparse.ArgumentParser()
     p.add_argument("rev_a")
     p.add_argument("rev_b", nargs="?", default=None)
-    p.add_argument("--queries", required=True)
+    p.add_argument("--queries", default=None,
+                   help="comma-separated names (default: bench.HEADLINE)")
     p.add_argument("--sessions", type=int, default=5)
     p.add_argument("--runs", type=int, default=3)
     p.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     p.add_argument("--out", default=None)
     a = p.parse_args()
-    names = a.queries.split(",")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if a.queries:
+        names = a.queries.split(",")
+    else:
+        sys.path.insert(0, repo)
+        from bench import HEADLINE
+        names = HEADLINE
 
     wts: list[str] = []
 
@@ -111,20 +120,22 @@ def main() -> int:
             sys.stderr.write(f"session {s + 1}/{a.sessions} B "
                              f"({a.rev_b or 'worktree'})\n")
             b_runs.append(_run_session(wt_b, names, a.sf_dir, a.runs))
+        common = [q for q in names
+                  if all(q in r for r in a_runs + b_runs)]
+        a_med = {q: round(_median([r[q] for r in a_runs]), 3)
+                 for q in common}
+        b_med = {q: round(_median([r[q] for r in b_runs]), 3)
+                 for q in common}
         result = {
             "rev_a": a.rev_a, "rev_b": a.rev_b or "worktree",
             "sessions": a.sessions, "runs_per_session": a.runs,
-            "sf_dir": a.sf_dir, "queries": names,
+            "sf_dir": a.sf_dir, "queries": common,
             "a_sessions": a_runs, "b_sessions": b_runs,
-            "a_median": {q: round(_median([r[q] for r in a_runs]), 3)
-                         for q in names},
-            "b_median": {q: round(_median([r[q] for r in b_runs]), 3)
-                         for q in names},
-        }
-        result["b_over_a"] = {
-            q: round(result["b_median"][q] / result["a_median"][q], 3)
-            if result["a_median"][q] else None
-            for q in names
+            "a_median": a_med, "b_median": b_med,
+            "b_over_a": {q: round(b_med[q] / a_med[q], 3)
+                         if a_med[q] else None for q in common},
+            "total_a": round(sum(a_med.values()), 3),
+            "total_b": round(sum(b_med.values()), 3),
         }
         line = json.dumps(result)
         print(line)
