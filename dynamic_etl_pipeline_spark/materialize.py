@@ -27,27 +27,71 @@ mode        behavior
 
 Select with the runtime conf ``spark.dynamic_etl.materialize``
 (session-wide) — cluster submissions set it once in spark-defaults.
+
+Metrics ride the same actions: :func:`observe` attaches named
+aggregates to a frame and returns a bounded ``read()`` for them, and
+operator counters (cap drop volume) are read back by label through
+:func:`counters`. No other module builds an ``Observation``.
 """
 
 from __future__ import annotations
 
+import time
+from typing import Callable
+
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 CONF_KEY = "spark.dynamic_etl.materialize"
 _MODES = ("local", "disk", "reliable")
+# Longest wait for an action's observed metrics to post. Spark posts
+# them from the listener bus, usually within milliseconds of the
+# action returning but not always before it; a plan no action ever ran
+# never posts them.
+_METRICS_WAIT_S = 60.0
+# label -> read() of the latest observe(..., label=label) frame
+_COUNTERS: dict[str, Callable[[], dict]] = {}
+
+
+def observe(df: DataFrame, label: str | None = None,
+            **metrics: Column) -> tuple[DataFrame, Callable[[], dict]]:
+    """Attach ``metrics`` (name -> aggregate Column) to ``df`` as one
+    Observation, collected by whatever action first runs the frame.
+
+    Returns the observed frame and ``read()``, which returns
+    ``{name: value}`` once that action has posted the metrics. It
+    returns as soon as they post and raises ``TimeoutError`` after
+    ``_METRICS_WAIT_S`` if they never do. With ``label``, the read is
+    also what :func:`counters` returns for that label.
+    """
+    obs = Observation()
+    out = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
+
+    def read() -> dict:
+        deadline = time.monotonic() + _METRICS_WAIT_S
+        # each probe waits at most 100 ms and returns early on posting
+        while not obs._jo.getRowOrEmpty().isDefined():
+            if time.monotonic() > deadline:
+                raise TimeoutError(f"observed metrics {sorted(metrics)} "
+                                   f"not posted in {_METRICS_WAIT_S} s")
+        return obs.get
+
+    if label is not None:
+        _COUNTERS[label] = read
+    return out, read
+
+
+def counters(label: str) -> dict:
+    """The metrics of the latest ``observe(..., label=label)`` frame,
+    read with the same bound (``KeyError`` for an unknown label)."""
+    return _COUNTERS[label]()
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` under the session's configured strategy.
 
-    Callers may read an ``Observation`` attached to ``df`` once an eager
-    call returns. ``obs.get`` blocks until the observed plan's action
-    posts its metrics. All three modes (localCheckpoint, DISK_ONLY
-    count, reliable checkpoint) post them on the pinned Spark 4.x, as
-    the tests verify. A future mode that executes without posting
-    observed metrics would make such a caller HANG rather than error,
-    so re-verify delivery when adding one.
+    An eager call is the action that posts metrics observed on ``df``;
+    reads of them are bounded by :func:`observe`.
     """
     mode = df.sparkSession.conf.get(CONF_KEY, "local")
     if mode not in _MODES:

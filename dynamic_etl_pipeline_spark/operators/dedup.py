@@ -25,23 +25,14 @@ value-hash — the driver records rows-only for these by design.
 
 from __future__ import annotations
 
-import logging
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-from ..materialize import materialize
-
-logger = logging.getLogger(__name__)
-
-# Observations from recent _cap_postings calls (drop-volume metrics,
-# readable after an action executes the capped plan — the lazy
-# replacement for the old per-call eager logging probe).
-_LSH_CAP_OBSERVATIONS: list = []
+from ..materialize import materialize, observe
 
 # MinHash permutations are affine maps h(g) = (a*g + b) mod p over the
 # gram universe [0, p) with p = 2^31-1 (Mersenne prime). The modulus
@@ -301,7 +292,7 @@ def band_postings(sigs: DataFrame, id_col: str, bands: int, r: int,
 
 def _cap_postings(postings: DataFrame, max_per_bucket: int,
                   keys: tuple[str, ...] = ("band_id", "band_hash"),
-                  id_col: str = "_id") -> DataFrame:
+                  id_col: str = "_id", *, label: str) -> DataFrame:
     """Per-bucket posting cap: any (band_id, band_hash) bucket larger
     than ``max_per_bucket`` is thinned to ~that size by a deterministic
     hash sample of its member ids.
@@ -321,24 +312,20 @@ def _cap_postings(postings: DataFrame, max_per_bucket: int,
     shingles.drop_stop_shingles): the hot-bucket frame is empty on
     clean corpora and the left join passes everything through — the
     old eager count()+first() probe spent two full aggregate jobs per
-    call purely on logging/no-op detection. Drop volume is recorded as
-    Observation metrics on the hot frame instead.
+    call purely on logging/no-op detection. Drop volume is observed on
+    the hot frame instead: after the caller's action,
+    ``materialize.counters(label)`` returns ``n_hot`` and
+    ``dropped_postings``.
     """
     sizes = (
         postings.groupBy(*keys)
         .agg(F.count("*").alias("_bn"))
         .filter(F.col("_bn") > max_per_bucket)
     )
-    obs = Observation()
-    sizes = sizes.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_hot"),
-        F.coalesce(
-            F.sum(F.col("_bn") - max_per_bucket), F.lit(0)
-        ).alias("dropped_postings"),
+    sizes, _ = observe(
+        sizes, label, n_hot=F.count(F.lit(1)),
+        dropped_postings=F.coalesce(F.sum(F.col("_bn") - max_per_bucket), F.lit(0)),
     )
-    _LSH_CAP_OBSERVATIONS.append(obs)
-    del _LSH_CAP_OBSERVATIONS[:-8]  # keep only recent ones
     keep_frac = F.lit(max_per_bucket) / F.col("_bn")
     u = (
         F.pmod(
@@ -475,14 +462,13 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
         # the r12 separate agg+first job — zero extra jobs, same
         # pattern as connected_components' convergence check; the
         # eager checkpoint is the action that delivers it).
-        obs = Observation()
-        mem0 = sigs_raw.select(
+        mem0, read = observe(sigs_raw.select(
             id_col, "sig",
             F.min(id_col).over(wsig).alias("_rep"),
             F.count("*").over(wsig).alias("_gn"),
-        ).observe(obs, F.max("_gn").alias("max_gn")).transform(materialize)
-        max_gn = obs.get["max_gn"]
-        if (max_gn or 1) == 1:
+        ), max_gn=F.max("_gn"))
+        mem0 = materialize(mem0)
+        if (read()["max_gn"] or 1) == 1:
             collapse_identical = False
             sigs = mem0.select(id_col, "sig")
             band_src = sigs
@@ -506,7 +492,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
                                  portable=portable_hash)
     if max_postings_per_band is not None:
         band_entries = _cap_postings(
-            band_entries.transform(materialize), max_postings_per_band
+            band_entries.transform(materialize), max_postings_per_band,
+            label="minhash-band",
         )
     left = band_entries.select(F.col("_id").alias("id_a"), "band_id", "band_hash")
     right = band_entries.select(F.col("_id").alias("id_b"), "band_id", "band_hash")
@@ -712,13 +699,13 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
         # needed; the max(_gn) probe rides the materialize action as
         # an Observation metric (r13 — zero extra jobs, the CC
         # convergence pattern)
-        obs = Observation()
-        mem0 = fp_raw.select(
+        mem0, read = observe(fp_raw.select(
             "_id", "fp",
             F.min("_id").over(wfp).alias("_rep"),
             F.count("*").over(wfp).alias("_gn"),
-        ).observe(obs, F.max("_gn").alias("max_gn")).transform(materialize)
-        if (obs.get["max_gn"] or 1) == 1:
+        ), max_gn=F.max("_gn"))
+        mem0 = materialize(mem0)
+        if (read()["max_gn"] or 1) == 1:
             collapse_identical = False
             chunk_src = mem0.select("_id", "fp")
         else:
@@ -740,7 +727,7 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
     if max_postings_per_chunk is not None:
         chunks = _cap_postings(
             chunks.transform(materialize), max_postings_per_chunk,
-            keys=("chunk_id", "chunk_val"),
+            keys=("chunk_id", "chunk_val"), label="simhash-chunk",
         )
     a = chunks.select(F.col("_id").alias("id_a"), F.col("fp").alias("fp_a"),
                       "chunk_id", "chunk_val")
@@ -828,14 +815,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         # costs ZERO extra jobs — the r7 shape still paid one
         # join+limit+count job per round against the previous labels.
         # Same verdict either way: sum(_chg) == 0  <=>  no label moved.
-        # obs.get blocks on metric delivery: see materialize()'s docstring.
-        obs = Observation()
-        updated = updated.observe(
-            obs, F.sum(F.col("_chg").cast("int")).alias("changed")
-        ).drop("_chg")
+        updated, read = observe(updated, changed=F.sum(F.col("_chg").cast("int")))
         # materialize BEFORE reading the metric: the eager action both
         # truncates lineage for the next round and delivers the metric.
-        labels = updated.transform(materialize)
-        if not (obs.get["changed"] or 0):
+        labels = materialize(updated.drop("_chg"))
+        if not (read()["changed"] or 0):
             break
     return labels

@@ -1152,9 +1152,7 @@ def kmeans_exact_fit(df: DataFrame, n_centroids: int = 8,
     # normalized input for the same reason). materialize() keeps this
     # cluster-safe: localCheckpoint locally, DISK_ONLY/reliable
     # checkpoint under the session's cluster flag.
-    from pyspark.sql import Observation
-
-    from ..materialize import materialize
+    from ..materialize import materialize, observe
 
     # The dim probe rides the materialize action as an Observation
     # metric (r13 opt — the CC-convergence pattern): the eager
@@ -1165,8 +1163,7 @@ def kmeans_exact_fit(df: DataFrame, n_centroids: int = 8,
     # k rows would itself be the state it guards against). max() makes
     # the probe deterministic where first() depended on row order;
     # identical for the uniform-dim inputs the operator is defined on.
-    obs = Observation()
-    base = materialize(
+    base, read = observe(
         df.filter(F.col(vec_col).isNotNull())
         .select(F.col(id_col), qv.alias("qv"))
         # Element-null vectors are excluded up front (ADVICE r11):
@@ -1177,10 +1174,11 @@ def kmeans_exact_fit(df: DataFrame, n_centroids: int = 8,
         # well-defined semantics is "not clusterable" — drop it here,
         # symmetric with the vec_col.isNotNull() filter above.
         .filter(F.forall("qv", lambda x: x.isNotNull()))
-        .withColumn("qd", F.transform(F.col("qv"), lambda x: x.cast("double")))
-        .observe(obs, F.max(F.size("qv")).alias("dim"))
+        .withColumn("qd", F.transform(F.col("qv"), lambda x: x.cast("double"))),
+        dim=F.max(F.size("qv")),
     )
-    dim = obs.get["dim"]
+    base = materialize(base)
+    dim = read()["dim"]
     if dim is None:
         raise ValueError("kmeans_exact_assign: no non-null vectors")
     import os

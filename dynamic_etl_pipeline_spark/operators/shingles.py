@@ -19,7 +19,7 @@ STOP_SHINGLE_SQRT_COEF below and SCALING.md). Ultra-common
 grams carry no dedup signal — two documents that are near-dups share
 many rare shingles too — so the capped pair set is a subset of the
 exact one that loses only pairs supported *exclusively* by boilerplate
-grams (the MinHash/SimHash tiers catch those). Drops are logged.
+grams (the MinHash/SimHash tiers catch those).
 
 Defaults (frac=0.05, floor_df=100) are chosen so the driver fixtures
 are untouched (hottest fixture shingle: df=25 of 5,000 docs at sf0.1),
@@ -32,33 +32,18 @@ keys), so the anti-join is an explicitly-broadcast equi-join. The cap
 is fully lazy (round-4 judge item #2): no eager action runs when the
 frame is built — on a clean corpus the broadcast side is simply empty
 and the anti-join is a no-op the executors resolve for free. Drop
-volume is surfaced through ``pyspark.sql.Observation`` metrics (the
-hot-frame scan records them as a side effect of whatever action the
-caller runs), never a blocking job of its own; fetch them after an
-action via :func:`last_cap_observation`.
+volume is observed on the hot frame (the hot-frame scan records it as
+a side effect of whatever action the caller runs), never a blocking
+job of its own; fetch it after an action with
+``materialize.counters(label)``.
 """
 
 from __future__ import annotations
 
-import logging
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-logger = logging.getLogger(__name__)
-
-# label -> Observation for the most recent drop_stop_shingles call;
-# Observation.get blocks until an action over the observed plan
-# finishes, so callers/tests read it AFTER running their action.
-_CAP_OBSERVATIONS: dict[str, Observation] = {}
-
-
-def last_cap_observation(label: str) -> Observation | None:
-    """The Observation attached to the hot-shingle frame of the most
-    recent :func:`drop_stop_shingles` call with this label. Its
-    ``get`` yields ``{"n_hot": ..., "dropped_postings": ...}`` once an
-    action has executed the capped plan."""
-    return _CAP_OBSERVATIONS.get(label)
+from ..materialize import observe
 
 # Fixture-safe defaults; see module docstring.
 STOP_SHINGLE_FRAC = 0.05
@@ -143,9 +128,9 @@ def drop_stop_shingles(shingled: DataFrame,
     side is empty and the join passes everything through — so the
     r4-judge-flagged eager ``.first()`` probe (a full postings
     aggregate spent purely on deciding no-op-vs-anti-join) is gone.
-    Drop volume is recorded via an ``Observation`` on the hot frame,
-    readable after the caller's action through
-    :func:`last_cap_observation`.
+    Drop volume is observed on the hot frame: after the caller's
+    action, ``materialize.counters(label)`` returns ``n_hot`` and
+    ``dropped_postings``.
     """
     # The 1-row corpus count joins in as a broadcast scalar gate. This
     # plans as a BroadcastNestedLoopJoin — unavoidable (the condition
@@ -174,13 +159,11 @@ def drop_stop_shingles(shingled: DataFrame,
         )
         .select(shingle_col, "_df")
     )
-    obs = Observation()
-    hot = hot.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_hot"),
-        F.coalesce(F.sum("_df"), F.lit(0)).alias("dropped_postings"),
+    hot, _ = observe(
+        hot, label,
+        n_hot=F.count(F.lit(1)),
+        dropped_postings=F.coalesce(F.sum("_df"), F.lit(0)),
     )
-    _CAP_OBSERVATIONS[label] = obs
     return shingled.join(
         F.broadcast(hot.select(shingle_col)), shingle_col, "left_anti"
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .functions.extract import extract_patterns
 from .ingest import read_any
+from .materialize import observe
 from .quality import ISSUES_COL, validate, with_lineage
 from .schema_registry import SchemaRegistry
 
@@ -64,6 +65,27 @@ class IngestReport:
     n_with_issues: int
     schema_version: int
     schema_changed: bool
+
+
+def _observe_quality(df: DataFrame):
+    """Attach the upload's record and issue counts to ``df``; the write
+    that stores it collects them."""
+    return observe(
+        df,
+        n_records=F.count(F.lit(1)),
+        n_bad=F.sum((F.size(F.col(ISSUES_COL)) > 0).cast("long")),
+    )
+
+
+def _report(counts: dict, version: int, changed: bool) -> IngestReport:
+    n_bad = counts["n_bad"] or 0
+    return IngestReport(
+        n_records=counts["n_records"],
+        n_good=counts["n_records"] - n_bad,
+        n_with_issues=n_bad,
+        schema_version=version,
+        schema_changed=changed,
+    )
 
 
 class EtlPipeline:
@@ -150,21 +172,13 @@ class EtlPipeline:
         pass plus a count pass (the reference re-loops too,
         app.py:353-366).
         """
-        from pyspark.sql import Observation
-
         # the lock spans transform too: register_df mutates the schema
         # catalog (version assignment must not race a concurrent ingest)
         with self._mutation_lock():
             df, version, changed = self.transform(
                 read_any(self.spark, path, **reader_kwargs)
             )
-            obs = Observation()
-            df = df.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_records"),
-                F.sum((F.size(F.col(ISSUES_COL)) > 0).cast("long"))
-                .alias("n_bad"),
-            )
+            df, read = _observe_quality(df)
             # Record store is partitioned by schema version: batches with
             # different shapes land in different directories, so reads with
             # mergeSchema reconstruct the drifted union (SURVEY §1.4).
@@ -177,15 +191,7 @@ class EtlPipeline:
                 .write.mode("append")
                 .parquet(f"{self.records_path}/_schema_version={version}")
             )
-        n_records = obs.get["n_records"]
-        n_bad = obs.get["n_bad"] or 0
-        return IngestReport(
-            n_records=n_records,
-            n_good=n_records - n_bad,
-            n_with_issues=n_bad,
-            schema_version=version,
-            schema_changed=changed,
-        )
+        return _report(read(), version, changed)
 
     def upsert(self, path: str | None = None, keys: list[str] | None = None,
                *, df: DataFrame | None = None, **reader_kwargs) -> IngestReport:
@@ -210,8 +216,6 @@ class EtlPipeline:
         the merge, so a batch that adds columns upserts cleanly (old
         rows read NULL for the new columns).
         """
-        from pyspark.sql import Observation
-
         from .operators.merge import merge_upsert
 
         if not keys:
@@ -228,13 +232,7 @@ class EtlPipeline:
             # schema-alignment probe taken BEFORE observe so the
             # Observation node appears exactly once in the merged plan
             align = batch.limit(0)
-            obs = Observation()
-            batch = batch.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_records"),
-                F.sum((F.size(F.col(ISSUES_COL)) > 0).cast("long"))
-                .alias("n_bad"),
-            )
+            batch, read = _observe_quality(batch)
             if not store.exists():
                 (
                     batch.drop("_schema_version")
@@ -264,15 +262,7 @@ class EtlPipeline:
                 )
                 store.rename(archive)
                 tmp.rename(store)
-        n_records = obs.get["n_records"]
-        n_bad = obs.get["n_bad"] or 0
-        return IngestReport(
-            n_records=n_records,
-            n_good=n_records - n_bad,
-            n_with_issues=n_bad,
-            schema_version=version,
-            schema_changed=changed,
-        )
+        return _report(read(), version, changed)
 
     def _recover_records(self) -> None:
         """Finish or roll back an interrupted upsert swap. Callers must

@@ -581,7 +581,7 @@ def apply_dedup_index_batch(batch_df, batch_id: int, store_dir: str,
         sigs, id_col, bands, r, portable=portable_hash
     ).transform(materialize)
     probe = (
-        _cap_postings(posts, max_postings_per_band)
+        _cap_postings(posts, max_postings_per_band, label="index-batch")
         if max_postings_per_band is not None else posts
     )
 
@@ -596,7 +596,7 @@ def apply_dedup_index_batch(batch_df, batch_id: int, store_dir: str,
     if older:
         stored = spark.read.parquet(*older)
         if max_postings_per_band is not None:
-            stored = _cap_postings(stored, max_postings_per_band)
+            stored = _cap_postings(stored, max_postings_per_band, label="index-store")
         stored = stored.select(
             F.col("_id").alias("id_a"), "band_id", "band_hash"
         )

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dynamic_etl_pipeline_spark import catalog
 from dynamic_etl_pipeline_spark.catalog import load_table
 from dynamic_etl_pipeline_spark.operators.layout import (
     cluster_by_zvalue,
@@ -189,3 +190,44 @@ def test_partitioned_static_overwrite_truncates(spark, sf_dir, tmp_path):
     day1 = ev.filter(F.col("event_date") == F.lit(one_day))
     write_partitioned(day1, path, ["event_date"], dynamic=False)
     assert read_partitioned(spark, path).count() == day1.count()
+
+
+def test_load_table_schema_cache_hits_and_matches(spark, tmp_path):
+    """load_table infers each table's schema once per (path,
+    stat-stamp, inference-conf) key and declares it afterwards. The
+    declared-schema read must see the identical StructType the
+    inference read saw, and rewriting the file must invalidate."""
+    import os
+
+    import pandas as pd
+
+    catalog._SCHEMA_CACHE.clear()
+    first = load_table(spark, SF, "lineitem")
+    key = catalog._schema_key(spark, catalog.table_path(SF, "lineitem"))
+    assert key in catalog._SCHEMA_CACHE  # miss populated the cache
+    # a rewritten path gets a DIFFERENT key (mtime/size in the stamp)
+    p = f"{tmp_path}/t.parquet"
+    spark.range(3).toPandas().to_parquet(p)
+    k1 = catalog._schema_key(spark, p)
+    pd.DataFrame({"id": [1, 2, 3], "x": ["a", "b", "c"]}).to_parquet(p)
+    k2 = catalog._schema_key(spark, p)
+    assert k1 != k2
+    # a part file rewritten IN PLACE inside a directory table leaves
+    # the directory's own mtime alone; the key must still change
+    d = f"{tmp_path}/dir_table"
+    os.mkdir(d)
+    part = f"{d}/part-0.parquet"
+    pd.DataFrame({"id": [1, 2, 3]}).to_parquet(part)
+    dir_st = os.stat(d)
+    k3 = catalog._schema_key(spark, d)
+    pd.DataFrame({"id": [1, 2, 3], "x": ["a", "b", "c"]}).to_parquet(part)
+    os.utime(d, ns=(dir_st.st_atime_ns, dir_st.st_mtime_ns))
+    assert os.stat(d).st_mtime_ns == dir_st.st_mtime_ns
+    assert catalog._schema_key(spark, d) != k3
+    second = load_table(spark, SF, "lineitem")
+    assert second.schema == first.schema
+    # events goes through the same cache AND the ts normalization
+    ev1 = load_table(spark, SF, "events")
+    ev2 = load_table(spark, SF, "events")
+    assert ev2.schema == ev1.schema
+    assert dict(ev2.dtypes)["ts"].startswith("timestamp")

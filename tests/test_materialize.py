@@ -1,13 +1,24 @@
 """Flag-switched lineage truncation (materialize.py, round-3 judge
 item #4): the conf selects localCheckpoint / DISK_ONLY persist /
-reliable checkpoint, and every strategy returns the same rows."""
+reliable checkpoint, and every strategy returns the same rows. Metrics
+observed with ``observe`` arrive after each strategy's action, and a
+read that never gets them fails within its bound instead of hanging."""
 
 from __future__ import annotations
+
+import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from dynamic_etl_pipeline_spark.materialize import CONF_KEY, materialize
+import dynamic_etl_pipeline_spark.materialize as mat_mod
+from dynamic_etl_pipeline_spark.materialize import (
+    CONF_KEY,
+    counters,
+    materialize,
+    observe,
+)
 
 
 @pytest.fixture()
@@ -66,3 +77,59 @@ def test_query_results_identical_across_modes(spark, reset_conf, sf_dir):
     spark.conf.set(CONF_KEY, "disk")
     disk = sorted(map(tuple, ngram_jaccard_pairs(spark, sf_dir).collect()))
     assert base == disk
+
+
+@pytest.mark.parametrize("mode", ["local", "disk", "reliable"])
+def test_observed_metrics_arrive_after_materialize(spark, reset_conf,
+                                                   tmp_path, mode):
+    if mode == "reliable":
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    spark.conf.set(CONF_KEY, mode)
+    df, read = observe(_frame(spark), n=F.count(F.lit(1)), total=F.sum("v"))
+    out = materialize(df)
+    assert read() == {"n": 100, "total": 9900}
+    if mode == "disk":
+        out.unpersist()
+
+
+def test_observed_metrics_arrive_after_parquet_write(spark, tmp_path):
+    # the pipeline's shape: the store write is the observed action
+    df, read = observe(
+        _frame(spark),
+        n=F.count(F.lit(1)),
+        n_big=F.sum((F.col("v") > 100).cast("long")),
+    )
+    df.write.parquet(str(tmp_path / "out"))
+    assert read() == {"n": 100, "n_big": 49}
+
+
+def test_read_of_never_run_frame_times_out(spark, monkeypatch):
+    monkeypatch.setattr(mat_mod, "_METRICS_WAIT_S", 0.5)
+    _, read = observe(_frame(spark), never_run=F.count(F.lit(1)))
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError, match="never_run"):
+        read()
+    assert time.monotonic() - t0 < 2.0
+
+
+def test_counters_read_the_latest_frame_of_a_label(spark):
+    first, _ = observe(_frame(spark), "test-label", n=F.count(F.lit(1)))
+    latest, _ = observe(
+        _frame(spark).limit(7), "test-label", n=F.count(F.lit(1))
+    )
+    first.count()
+    latest.count()
+    assert counters("test-label") == {"n": 7}
+
+
+def test_observation_built_only_in_materialize():
+    """One place attaches and reads observed metrics: no other package
+    module builds an Observation or blocks on its unbounded ``get``."""
+    pkg = Path(mat_mod.__file__).parent
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if p != Path(mat_mod.__file__)
+        and ("Observation(" in p.read_text() or "obs.get" in p.read_text())
+    ]
+    assert not offenders, offenders

@@ -10,14 +10,17 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from dynamic_etl_pipeline_spark.materialize import counters
 from dynamic_etl_pipeline_spark.operators.asof import asof_join
 from dynamic_etl_pipeline_spark.operators.dedup import (
+    band_postings,
     connected_components,
     dedup_exact,
     minhash_lsh_pairs,
     minhash_signatures,
     shingle_ngrams,
     simhash64,
+    simhash_fingerprints,
     simhash_pairs,
 )
 from dynamic_etl_pipeline_spark.operators.knn import cosine_topk, lsh_ann_topk
@@ -27,6 +30,7 @@ from dynamic_etl_pipeline_spark.operators.multimodal import (
     frame_sample,
     media_stats,
 )
+from dynamic_etl_pipeline_spark.plans.inspect import formatted_plan
 
 
 # ---------------------------------------------------------------------------
@@ -120,6 +124,48 @@ def test_connected_components_two_clusters(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
+def test_connected_components_observation_convergence(spark, monkeypatch):
+    """The CC convergence check rides the checkpoint action as an
+    observed metric. Pin that (a) results are the min-label closure
+    and (b) the loop EXITS EARLY — the round count is observed by
+    counting materialize() calls (asserting only the final closure
+    let an always-truthy metric spin to max_iter undetected).
+    The deepest chain here is 20-21-22-23: min-label propagation
+    needs 3 label rounds + 1 no-change round = 5 materializes
+    (1 for the edge frame) — far below max_iter=20's 21."""
+    import dynamic_etl_pipeline_spark.operators.dedup as dedup_mod
+
+    calls = {"n": 0}
+    real = dedup_mod.materialize
+
+    def counting(df, eager=True):
+        calls["n"] += 1
+        return real(df, eager)
+
+    monkeypatch.setattr(dedup_mod, "materialize", counting)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
+        ["id_a", "id_b"],
+    )
+    out = {
+        r["id"]: r["component"]
+        for r in connected_components(pairs, max_iter=20).collect()
+    }
+    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
+                   20: 20, 21: 20, 22: 20, 23: 20}
+    # 1 edge materialize + one per executed round; early exit means
+    # far fewer than the 1 + max_iter ceiling (21)
+    assert calls["n"] <= 6, calls["n"]
+    assert calls["n"] >= 4, calls["n"]
+
+
+def test_connected_components_empty_edges(spark):
+    """Empty edge frame: the observed sum(changed) is NULL — the loop
+    must treat it as converged, not crash or spin."""
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    assert connected_components(pairs, max_iter=3).count() == 0
+
+
 # ---------------------------------------------------------------------------
 # Hot-band mitigation (VERDICT r2 item 1): a duplicate cluster of c docs
 # must cost O(c), not O(c^2), through the LSH band join.
@@ -174,25 +220,19 @@ def test_minhash_posting_cap_thins_hot_buckets(spark):
     # 12 docs sharing one template word-set permutation: force a tiny
     # cap so the hot-bucket path executes (collapse off so buckets
     # actually exceed the cap). The cap is lazy (round 5): no eager
-    # probe job — drop volume surfaces through Observation metrics
-    # once the caller's action runs.
-    from dynamic_etl_pipeline_spark.operators.dedup import (
-        _LSH_CAP_OBSERVATIONS,
-    )
-
+    # probe job — drop volume surfaces through the "minhash-band"
+    # counters once the caller's action runs.
     texts = [
         "zz template words shared by every doc " + f"unique{i}"
         for i in range(12)
     ]
     df = corpus(spark, texts)
-    del _LSH_CAP_OBSERVATIONS[:]
     out = minhash_lsh_pairs(
         df, "doc_id", "text", threshold=0.1, udf_partitions=4,
         collapse_identical=False, max_postings_per_band=2,
     ).collect()
-    assert _LSH_CAP_OBSERVATIONS, "cap path did not register observations"
-    stats = [o.get for o in _LSH_CAP_OBSERVATIONS]
-    assert any(s["n_hot"] > 0 and s["dropped_postings"] > 0 for s in stats)
+    got = counters("minhash-band")
+    assert got["n_hot"] > 0 and got["dropped_postings"] > 0
     assert all(r["id_a"] < r["id_b"] for r in out)
 
 
@@ -212,6 +252,136 @@ def test_simhash_hot_cluster_linear_pairs(spark):
     got = pairs.collect()
     assert len(got) == c - 1
     assert all(r["hamming"] == 0 and r["id_a"] == 0 for r in got)
+
+
+# ---------------------------------------------------------------------------
+# MinHash plan mechanisms: the single-pass window collapse, one
+# MapInArrow signature node, the struct-packed portable band key, and
+# the collapse probe riding the materialize as an observed metric.
+# Outputs stay pinned by the oracle gate; these pin the mechanisms.
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("texts,expect_collapse", [
+    # identical texts -> identical signatures -> collapse path
+    (["w1 w2 w3 w4 w5"] * 3 + ["a b c d e"], True),
+    # all-distinct signatures -> fast path (no expansion joins)
+    (["%d x%d y%d z%d q%d" % (i, i, i + 1, i + 2, i) for i in range(6)],
+     False),
+])
+def test_minhash_window_collapse_paths(spark, texts, expect_collapse):
+    """The single-pass window collapse must keep both paths of
+    minhash_lsh_pairs correct: exact-dup groups expand to member pairs
+    with est_jaccard 1.0; distinct corpora take the no-dup fast path
+    and still pair near-dups."""
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
+    )
+    pairs = minhash_lsh_pairs(
+        docs, "doc_id", "text", threshold=0.5, shingle_n=2
+    ).collect()
+    got = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in pairs}
+    if expect_collapse:
+        # the three identical docs form all three member pairs, exact
+        assert got[(0, 1)] == got[(0, 2)] == got[(1, 2)] == 1.0
+
+
+@pytest.fixture(scope="module")
+def dup_docs(spark):
+    rows = [
+        (i, f"some shared words plus token{i} marker{i % 7} tail{i}")
+        for i in range(40)
+    ]
+    # two exact duplicate pairs so the collapse slow path runs
+    rows += [(100, rows[0][1]), (101, rows[1][1])]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def test_minhash_signatures_single_mapinarrow_node(spark, dup_docs):
+    sigs = minhash_signatures(dup_docs, "doc_id", "text", udf_partitions=4)
+    plan = formatted_plan(sigs)
+    assert plan.count("MapInArrow") >= 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_portable_band_struct_key_matches_string_key_candidates(spark, dup_docs):
+    """The struct-packed portable band key must produce EXACTLY the
+    string key's candidate pairs: packing (m_lo * 2^31 + m_hi) is
+    injective for minima < 2^31, so (band_id, struct) equality ==
+    (band_id, minima-tuple) equality == the old string equality."""
+    sigs = minhash_signatures(
+        dup_docs, "doc_id", "text", udf_partitions=2, portable_hash=True
+    ).localCheckpoint()
+    bands, r = 16, 4
+    new = band_postings(sigs, "doc_id", bands, r, portable=True)
+    # the earlier comma-joined string form, built inline
+    old = sigs.select(
+        F.col("doc_id").alias("_id"),
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.concat_ws(",", F.slice("sig", b * r + 1, r)),
+            )
+        ).alias("band_id", "band_hash"),
+    )
+
+    def pairs(posts):
+        l = posts.select(F.col("_id").alias("a"), "band_id", "band_hash")
+        rr = posts.select(F.col("_id").alias("b"), "band_id", "band_hash")
+        return {
+            (x["a"], x["b"])
+            for x in l.join(rr, ["band_id", "band_hash"])
+            .filter(F.col("a") < F.col("b"))
+            .select("a", "b")
+            .distinct()
+            .collect()
+        }
+
+    got, want = pairs(new), pairs(old)
+    assert got == want and len(got) > 0
+
+
+def test_collapse_probe_is_observation_not_extra_job(spark, dup_docs):
+    """The max(_gn) fast-path probe rides the collapse materialize as
+    an observed metric: constructing minhash_lsh_pairs (collapse
+    path, no posting cap) fires exactly as many jobs as the collapse
+    materialize alone (AQE may split one action into several stage-
+    materialization jobs, so the pin is the DELTA, not an absolute).
+    One extra job means the probe regressed to a separate agg action."""
+    from pyspark.sql import Window
+
+    from dynamic_etl_pipeline_spark.materialize import materialize
+
+    sc = spark.sparkContext
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def collapse_materialize_only():
+        s = minhash_signatures(dup_docs, "doc_id", "text", udf_partitions=2)
+        w = Window.partitionBy("sig")
+        return materialize(s.select(
+            "doc_id", "sig",
+            F.min("doc_id").over(w).alias("_rep"),
+            F.count("*").over(w).alias("_gn"),
+        ))
+
+    _, n_mat = jobs_in("collapse_mat_only", collapse_materialize_only)
+    df, n_constr = jobs_in(
+        "collapse_constr",
+        lambda: minhash_lsh_pairs(
+            dup_docs, "doc_id", "text", udf_partitions=2,
+            max_postings_per_band=None,
+        ),
+    )
+    assert n_constr == n_mat, (n_constr, n_mat)
+    # and the duplicate groups were detected (slow path: expansion ran)
+    pairs = {(r["id_a"], r["id_b"]) for r in df.collect()}
+    assert (0, 100) in pairs and (1, 101) in pairs
 
 
 # ---------------------------------------------------------------------------
@@ -1009,6 +1179,14 @@ def test_kmeans_frames_state_bit_matches_collect(spark, sf_dir):
            {r["vec_id"]: r["cluster_id"] for r in d_df.collect()}
 
 
+def _variant_docs(spark):
+    return spark.createDataFrame(
+        [(i, "the quick brown fox jumps over the lazy dog near the "
+             f"river bank today variant{i}") for i in range(12)],
+        "doc_id long, text string",
+    )
+
+
 def test_simhash_chunk_cap_trips_on_distinct_fingerprints(spark):
     """SCALING.md r11 audit-table row pinned in code: simhash's 16-bit
     chunk key is a FIXED domain (the join_theta class) — a cluster of
@@ -1017,25 +1195,14 @@ def test_simhash_chunk_cap_trips_on_distinct_fingerprints(spark):
     the identical-signature collapse cannot help (nothing is
     identical). The max_postings_per_chunk cap is the linearizer: with
     a tiny cap forced, the hot-bucket path must actually thin distinct
-    fingerprints and surface drop volume through Observation metrics,
-    and surviving pairs stay canonical (id_a < id_b)."""
-    from dynamic_etl_pipeline_spark.operators.dedup import (
-        _LSH_CAP_OBSERVATIONS,
-        simhash_pairs,
-    )
-
-    df = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog near the "
-             f"river bank today variant{i}") for i in range(12)],
-        "doc_id long, text string",
-    )
-    del _LSH_CAP_OBSERVATIONS[:]
+    fingerprints and surface drop volume through the "simhash-chunk"
+    counters, and surviving pairs stay canonical (id_a < id_b)."""
+    df = _variant_docs(spark)
     out = simhash_pairs(
         df, "doc_id", "text", max_hamming=10, max_postings_per_chunk=2
     ).collect()
-    assert _LSH_CAP_OBSERVATIONS, "chunk-cap path did not register"
-    stats = [o.get for o in _LSH_CAP_OBSERVATIONS]
-    assert any(s["n_hot"] > 0 and s["dropped_postings"] > 0 for s in stats)
+    got = counters("simhash-chunk")
+    assert got["n_hot"] > 0 and got["dropped_postings"] > 0
     assert out and all(r["id_a"] < r["id_b"] for r in out)
 
 
@@ -1046,23 +1213,49 @@ def test_minhash_band_cap_trips_on_distinct_signatures(spark):
     shared band buckets where the band self-join is quadratic in
     bucket size. max_postings_per_band is the linearizer: with a tiny
     cap forced, the hot-bucket path must actually thin distinct
-    postings and surface drop volume through the Observation metrics,
-    and surviving pairs stay canonical (id_a < id_b)."""
-    from dynamic_etl_pipeline_spark.operators.dedup import (
-        _LSH_CAP_OBSERVATIONS,
-        minhash_lsh_pairs,
-    )
-
-    df = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog near the "
-             f"river bank today variant{i}") for i in range(12)],
-        "doc_id long, text string",
-    )
-    del _LSH_CAP_OBSERVATIONS[:]
+    postings and surface drop volume through the "minhash-band"
+    counters, and surviving pairs stay canonical (id_a < id_b)."""
+    df = _variant_docs(spark)
     out = minhash_lsh_pairs(
         df, "doc_id", "text", threshold=0.3, max_postings_per_band=2
     ).collect()
-    assert _LSH_CAP_OBSERVATIONS, "band-cap path did not register"
-    stats = [o.get for o in _LSH_CAP_OBSERVATIONS]
-    assert any(s["n_hot"] > 0 and s["dropped_postings"] > 0 for s in stats)
+    got = counters("minhash-band")
+    assert got["n_hot"] > 0 and got["dropped_postings"] > 0
     assert out and all(r["id_a"] < r["id_b"] for r in out)
+
+
+def _hot_buckets(postings, keys, cap):
+    """The cap's counters computed straight from the postings."""
+    sizes = postings.groupBy(*keys).count().filter(F.col("count") > cap)
+    rows = sizes.collect()
+    return {"n_hot": len(rows),
+            "dropped_postings": sum(r["count"] - cap for r in rows)}
+
+
+def test_band_and_chunk_caps_keep_their_own_counters(spark):
+    """A MinHash band cap and a SimHash chunk cap run in one session:
+    each label holds exactly its own call's hot-bucket counts, not the
+    other's (collapse off, so every document's postings are capped)."""
+    df = _variant_docs(spark)
+    minhash_lsh_pairs(
+        df, "doc_id", "text", threshold=0.3, collapse_identical=False,
+        max_postings_per_band=2,
+    ).collect()
+    simhash_pairs(
+        df, "doc_id", "text", max_hamming=10, collapse_identical=False,
+        max_postings_per_chunk=2,
+    ).collect()
+    bands = band_postings(
+        minhash_signatures(df, "doc_id", "text"), "doc_id", 16, 4
+    )
+    chunks = simhash_fingerprints(df, "doc_id", "text").select(
+        F.posexplode(F.array(*[
+            F.shiftright(F.col("fp"), i * 16).bitwiseAND(F.lit(0xFFFF))
+            for i in range(4)
+        ])).alias("chunk_id", "chunk_val"),
+    )
+    want_band = _hot_buckets(bands, ("band_id", "band_hash"), 2)
+    want_chunk = _hot_buckets(chunks, ("chunk_id", "chunk_val"), 2)
+    assert want_band != want_chunk  # the two calls are distinguishable
+    assert counters("minhash-band") == want_band
+    assert counters("simhash-chunk") == want_chunk

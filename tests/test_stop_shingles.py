@@ -16,8 +16,10 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from dynamic_etl_pipeline_spark.materialize import counters
 from dynamic_etl_pipeline_spark.operators.shingles import (
     drop_stop_shingles,
+    word_ngram_arrays,
     word_ngram_postings,
 )
 from dynamic_etl_pipeline_spark.queries.text import ngram_jaccard_pairs
@@ -122,18 +124,14 @@ def test_construction_triggers_zero_jobs(spark, sf_dir):
 
 def test_drop_volume_via_observation(spark):
     """Drop logging is observe()-based (no blocking job): after the
-    caller's action, the Observation carries hot-shingle stats."""
-    from dynamic_etl_pipeline_spark.operators.shingles import (
-        last_cap_observation,
-    )
-
+    caller's action, the label's counters carry hot-shingle stats."""
     docs = spark.createDataFrame(_planted_rows(30), _DOC_SCHEMA)
     shingled = word_ngram_postings(docs, 3)
     capped = drop_stop_shingles(shingled, frac=0.05, floor_df=5,
                                 label="obs-test")
     n = capped.count()
     assert n == shingled.count() - 30  # one hot shingle, df=30, dropped
-    got = last_cap_observation("obs-test").get
+    got = counters("obs-test")
     assert got["n_hot"] == 1 and got["dropped_postings"] == 30
 
 
@@ -208,19 +206,45 @@ def test_default_formula_trips_with_observation(spark, boiler_dir):
     """VERDICT r11 item 5: the DEFAULT df formula (no threshold
     overrides — max(floor 100, min(0.05*n, 10*sqrt(n))) at n=1000 docs
     = max(100, min(50, 316)) = 100) must itself trip on a forced-hot
-    corpus AND surface the drop through the Observation — the earlier
+    corpus AND surface the drop through its counters — the earlier
     default-threshold test checked only the surviving postings, the
-    Observation test only ran with overridden thresholds."""
-    from dynamic_etl_pipeline_spark.operators.shingles import (
-        last_cap_observation,
-    )
-
+    counters test only ran with overridden thresholds."""
     docs = spark.read.parquet(f"{boiler_dir}/documents.parquet")
     shingled = word_ngram_postings(docs, 3)
     capped = drop_stop_shingles(shingled, label="default-trip")
-    survivors = capped.count()  # action -> Observation populated
-    got = last_cap_observation("default-trip").get
+    survivors = capped.count()  # action -> counters posted
+    got = counters("default-trip")
     assert got["n_hot"] >= 1
     # the planted boilerplate shingle has df=1000 > threshold 100
     assert got["dropped_postings"] >= 1000
     assert survivors == shingled.count() - got["dropped_postings"]
+
+
+def test_word_ngram_arrays_explode_is_postings(spark):
+    """word_ngram_postings == explode(word_ngram_arrays) — the
+    near-dup family materializes the array form and recovers postings
+    for free, so the two views must agree row-for-row (incl. the
+    short-doc dropout and within-doc distinctness)."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d a b c"), (2, "a b"), (3, ""), (4, "x y z"),
+         (5, "a a a a")],
+        ["doc_id", "text"],
+    )
+    via_arrays = (
+        word_ngram_arrays(docs, 3)
+        .select("doc_id", F.explode("shingles").alias("shingle"))
+    )
+    direct = word_ngram_postings(docs, 3)
+    assert sorted(map(tuple, via_arrays.collect())) == sorted(
+        map(tuple, direct.collect())
+    )
+    # counts channel: size(shingles) == the old groupBy count
+    sizes = dict(
+        word_ngram_arrays(docs, 3)
+        .select("doc_id", F.size("shingles").alias("n")).collect()
+    )
+    counted = dict(
+        direct.groupBy("doc_id").agg(F.count("*").alias("n")).collect()
+    )
+    # doc 1: grams abc bcd cda dab abc -> 4 distinct; docs 2/3 drop out
+    assert sizes == counted == {1: 4, 4: 1, 5: 1}
