@@ -11,16 +11,25 @@ Engine flow (per batch): read_any (Spark reader) -> extract_patterns
 validate + lineage (codegen) -> one partition-parallel parquet append.
 Same semantics, no per-row Python, no per-row transactions — the
 whole pipeline is a single Spark job and scales with partition count.
+
+Reads (records(), snapshot(), the upsert's target) go through
+``_read_store``: the union schema of the drifted partitions is folded
+from the part files' parquet footers with pyarrow and declared, so
+building the frame runs no Spark job.
 """
 
 from __future__ import annotations
 
+import functools
+import json
+import os
 from contextlib import contextmanager
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .functions.extract import extract_patterns
 from .ingest import read_any
@@ -86,6 +95,134 @@ def _report(counts: dict, version: int, changed: bool) -> IngestReport:
         schema_version=version,
         schema_changed=changed,
     )
+
+
+# -- store reads --------------------------------------------------------
+# A mergeSchema read runs one Spark job to merge every part file's
+# footer before the caller's action starts. Spark writers already put
+# the Catalyst schema in each footer, so this module reads those with
+# pyarrow, folds them the way that job would and declares the result.
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _leaf_files(root: str) -> list[str]:
+    """The files Spark's file index lists under ``root``, in the sorted
+    path order its schema merge folds them in."""
+    def listed(name: str) -> bool:
+        return not (name.startswith(".") or name.endswith("._COPYING_")
+                    or (name.startswith("_") and "=" not in name
+                        and not name.startswith(("_metadata", "_common_metadata"))))
+
+    files = []
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if listed(d)]
+        files += [os.path.join(dirpath, f) for f in filenames if listed(f)]
+    return sorted(files)
+
+
+@functools.lru_cache(maxsize=4096)
+def _footer_schema_json(path: str, size: int, mtime_ns: int) -> str | None:
+    """The Catalyst schema JSON in one part file's footer (None when
+    another writer left it out); keyed by size and mtime, so a rewrite
+    reads the footer again."""
+    import pyarrow.parquet as pq
+
+    raw = (pq.read_schema(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return None if raw is None else raw.decode()
+
+
+def _merge_type(a: T.DataType, b: T.DataType, case_sensitive: bool) -> T.DataType:
+    """``StructType.merge`` restated: the left field's name and metadata
+    win, nullability ORs, and leaf types must be equal (Spark's own
+    widening, e.g. of decimals, is left to Spark)."""
+    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
+        key = (lambda n: n) if case_sensitive else str.lower
+        right = {key(f.name): f for f in b.fields}
+        fields = [
+            T.StructField(
+                f.name,
+                _merge_type(f.dataType, right[key(f.name)].dataType, case_sensitive),
+                f.nullable or right[key(f.name)].nullable,
+                f.metadata,
+            ) if key(f.name) in right else f
+            for f in a.fields
+        ]
+        left = {key(f.name) for f in a.fields}
+        return T.StructType(fields + [f for f in b.fields if key(f.name) not in left])
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        return T.ArrayType(_merge_type(a.elementType, b.elementType, case_sensitive),
+                           a.containsNull or b.containsNull)
+    if isinstance(a, T.MapType) and isinstance(b, T.MapType):
+        return T.MapType(_merge_type(a.keyType, b.keyType, case_sensitive),
+                         _merge_type(a.valueType, b.valueType, case_sensitive),
+                         a.valueContainsNull or b.valueContainsNull)
+    if a == b:
+        return a
+    raise TypeError(f"unequal leaf types {a} and {b}")
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema a mergeSchema read of ``path`` infers, from the part
+    files' footers, read with pyarrow; None for any store this restatement
+    does not cover (summary files, foreign writers, unreadable footers,
+    unequal leaf types, a data column named like a partition column, an
+    empty listing)."""
+    files = _leaf_files(path)
+    if not files or any(os.path.basename(f).startswith("_") for f in files):
+        return None
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive").lower() == "true"
+    try:
+        stats = [os.stat(f) for f in files]
+        distinct = dict.fromkeys(
+            _footer_schema_json(f, st.st_size, st.st_mtime_ns)
+            for f, st in zip(files, stats)
+        )
+        if None in distinct:
+            return None
+        schemas = [T.StructType.fromJson(json.loads(s)) for s in distinct]
+        merged = functools.reduce(
+            lambda a, b: _merge_type(a, b, case_sensitive), schemas
+        )
+    except (OSError, ValueError, LookupError, TypeError):
+        # an unreadable footer (pyarrow's errors derive from these),
+        # schema JSON the types module rejects, or unequal leaf types
+        return None
+    # a data column named like a partition column keeps its file
+    # position when inferred but moves last when declared
+    part_cols = {
+        seg.split("=", 1)[0].lower()
+        for f in files
+        for seg in os.path.relpath(os.path.dirname(f), path).split(os.sep)
+        if "=" in seg
+    }
+    if part_cols & {f.name.lower() for f in merged.fields}:
+        return None
+    return merged
+
+
+def _read_store(spark: SparkSession, path: str) -> DataFrame:
+    """Read a record-store directory with the union schema of its
+    drifted partitions. The schema comes from the footers, read with
+    pyarrow (no Spark job); anything that path does not cover falls
+    back to Spark's mergeSchema read, whose schema or error the caller
+    gets."""
+    schema = _footer_schema(spark, path)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    try:
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    except Exception as exc:
+        if "merge" in str(exc).lower():
+            raise RuntimeError(
+                f"record store {path} has TYPE-drifted "
+                "partitions parquet schema merge cannot reconcile "
+                "(e.g. a column ingested as bigint in one batch and "
+                "double in another); run EtlPipeline.migrate() to "
+                "rewrite drifted partitions to the widened union "
+                "schema, then re-read"
+            ) from exc
+        raise
 
 
 class EtlPipeline:
@@ -180,12 +317,12 @@ class EtlPipeline:
             )
             df, read = _observe_quality(df)
             # Record store is partitioned by schema version: batches with
-            # different shapes land in different directories, so reads with
-            # mergeSchema reconstruct the drifted union (SURVEY §1.4).
-            # The version is constant per batch by construction, so write
-            # straight into the Hive-style partition dir — same on-disk
-            # layout as partitionBy() without the dynamic-partition commit
-            # machinery (mergeSchema is a read-side option; records() sets it).
+            # different shapes land in different directories, and reads
+            # reconstruct the drifted union from the footers (SURVEY §1.4,
+            # _read_store). The version is constant per batch by
+            # construction, so write straight into the Hive-style
+            # partition dir — same on-disk layout as partitionBy() without
+            # the dynamic-partition commit machinery.
             (
                 df.drop("_schema_version")
                 .write.mode("append")
@@ -240,10 +377,8 @@ class EtlPipeline:
                     .parquet(f"{self.records_path}/_schema_version={version}")
                 )
             else:
-                target = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .parquet(self.records_path)
-                    .unionByName(align, allowMissingColumns=True)
+                target = _read_store(self.spark, self.records_path).unionByName(
+                    align, allowMissingColumns=True
                 )
                 merged = merge_upsert(target, batch, keys)
                 tmp = store.with_name("records.upserting")
@@ -319,23 +454,13 @@ class EtlPipeline:
 
         ``version`` filters on the partition column, so the scan prunes
         to one schema-version directory instead of listing the store.
+        The schema is the union of the drifted partitions, read from the
+        footers by ``_read_store``: no Spark job runs before the
+        caller's action. A type-drifted store raises ``RuntimeError``
+        pointing at ``migrate()``.
         """
         self._try_recover_records()
-        try:
-            df = self.spark.read.option("mergeSchema", "true").parquet(
-                self.records_path
-            )
-        except Exception as exc:
-            if "merge" in str(exc).lower():
-                raise RuntimeError(
-                    f"record store {self.records_path} has TYPE-drifted "
-                    "partitions parquet schema merge cannot reconcile "
-                    "(e.g. a column ingested as bigint in one batch and "
-                    "double in another); run EtlPipeline.migrate() to "
-                    "rewrite drifted partitions to the widened union "
-                    "schema, then re-read"
-                ) from exc
-            raise
+        df = _read_store(self.spark, self.records_path)
         if version is not None:
             df = df.filter(F.col("_schema_version") == version)
         if latest_n is not None:
@@ -376,7 +501,8 @@ class EtlPipeline:
 
     def snapshot(self, generation: int) -> DataFrame:
         """Read the record store as of BEFORE the given upsert: time
-        travel to archived generation N (1-based, see history())."""
+        travel to archived generation N (1-based, see history()), with
+        the same footer-declared union schema as records()."""
         path = Path(self.records_path).with_name(
             f"records.gen-{generation:06d}"
         )
@@ -385,7 +511,7 @@ class EtlPipeline:
             raise ValueError(
                 f"no archived generation {generation}; available: {known}"
             )
-        return self.spark.read.option("mergeSchema", "true").parquet(str(path))
+        return _read_store(self.spark, str(path))
 
     def diff(self, generation: int, other: int | None = None) -> DataFrame:
         """Row-level diff between two store states (round 4): rows in
@@ -451,7 +577,6 @@ class EtlPipeline:
         SQLite file is a category error, so no distributed writer is
         provided. Returns the number of record rows exported.
         """
-        import json
         import sqlite3
 
         from .quality import INGESTED_COL, VERSION_COL
@@ -525,9 +650,9 @@ class EtlPipeline:
         schema (the reference only RECORDS schema evolution,
         app.py:205-215; this applies it). Ingest-time drift leaves each
         ``_schema_version=N`` partition with the column set of ITS
-        batch; reads paper over the drift with mergeSchema, which at
-        scale costs a footer sample per query and blocks plain
-        external readers. migrate() rewrites ONLY the partitions that
+        batch; the package's reads paper over the drift by folding the
+        footers' schemas, but plain external readers see only one
+        partition's columns. migrate() rewrites ONLY the partitions that
         diverge from the union schema — a missing column is NULL-padded
         with the union dtype, and a column whose TYPE drifted (e.g. an
         int batch followed by a double batch) is cast to the widened

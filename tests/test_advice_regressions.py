@@ -148,53 +148,6 @@ def test_minhash_kernel_short_final_doc(spark):
     assert sigs == {1}  # short doc has no shingles -> dropped, no crash
 
 
-def test_merge_null_keys_classified_by_presence(spark):
-    from dynamic_etl_pipeline_spark.operators.merge import merge_upsert
-
-    target = spark.createDataFrame([(None, "t-null"), (1, "t1")], "k int, v string")
-    source = spark.createDataFrame([(None, "s-null"), (1, "s1")], "k int, v string")
-    # NULL keys never equi-match: target NULL-key row is carried, source
-    # NULL-key row inserts WITH ITS OWN values
-    key = lambda t: (t[0] is not None, t[0] or 0, t[1])
-    got = sorted(((r["k"], r["v"]) for r in
-                  merge_upsert(target, source, ["k"]).collect()), key=key)
-    assert got == [(None, "s-null"), (None, "t-null"), (1, "s1")]
-    # insert=False must still carry the NULL-key target row
-    kept = sorted(((r["k"], r["v"]) for r in
-                   merge_upsert(target, source, ["k"], insert=False).collect()),
-                  key=key)
-    assert kept == [(None, "t-null"), (1, "s1")]
-
-
-def test_upsert_swap_crash_recovery(spark, tmp_path):
-    import shutil
-    from pathlib import Path
-
-    from dynamic_etl_pipeline_spark.pipeline import EtlPipeline
-
-    store_dir = str(tmp_path / "crash_store")
-    pipe = EtlPipeline(spark, store_dir)
-    pipe.upsert(df=spark.createDataFrame([("k1", "v1")], ["rec_id", "content"]),
-                keys=["rec_id"])
-    records = Path(pipe.records_path)
-
-    # (a) crash between the two renames: store moved to .old, committed
-    # staging present -> recovery must roll FORWARD to the staging state
-    tmp = records.with_name("records.upserting")
-    shutil.copytree(records, tmp)  # committed merge result (has _SUCCESS)
-    records.rename(records.with_name("records.old"))
-    assert {r["rec_id"] for r in pipe.records().collect()} == {"k1"}
-    assert records.exists() and not tmp.exists()
-
-    # (b) crash mid-staging-write: uncommitted staging + store renamed
-    # away -> recovery must roll BACK to the old store
-    tmp.mkdir()
-    (tmp / "part-0.parquet").write_bytes(b"garbage")  # no _SUCCESS
-    records.rename(records.with_name("records.old"))
-    assert {r["rec_id"] for r in pipe.records().collect()} == {"k1"}
-    assert not tmp.exists() and not records.with_name("records.old").exists()
-
-
 # ---------------------------------------------------------------------------
 # Round-2 advisor findings (ADVICE.md r2)
 # ---------------------------------------------------------------------------
@@ -256,36 +209,6 @@ def test_unpivot_include_nulls_matches_union_all(spark, sf_dir):
     }
 
 
-def test_upsert_crash_before_archive_rolls_forward(spark, tmp_path):
-    """Crash AFTER the staging _SUCCESS but BEFORE the store->archive
-    rename: store still present + committed staging. Recovery must
-    complete the swap (archive a generation, promote staging) — the
-    commit point is the _SUCCESS marker, not the first rename."""
-    import shutil
-    from pathlib import Path
-
-    from dynamic_etl_pipeline_spark.pipeline import EtlPipeline
-
-    store_dir = str(tmp_path / "crash_fwd_store")
-    pipe = EtlPipeline(spark, store_dir)
-    pipe.upsert(df=spark.createDataFrame([("k1", "v1")], ["rec_id", "content"]),
-                keys=["rec_id"])
-    pipe.upsert(df=spark.createDataFrame([("k1", "v2"), ("k2", "v2")],
-                                         ["rec_id", "content"]),
-                keys=["rec_id"])
-    records = Path(pipe.records_path)
-    n_gens_before = len(pipe.history())
-
-    # simulate: committed staging alongside a still-present store
-    tmp = records.with_name("records.upserting")
-    shutil.copytree(records, tmp)
-    got = {r["rec_id"] for r in pipe.records().collect()}
-    assert got == {"k1", "k2"}
-    assert not tmp.exists()
-    # the displaced store was archived, not discarded
-    assert len(pipe.history()) == n_gens_before + 1
-
-
 def test_dedup_index_bad_band_config_valueerror(spark, tmp_path):
     """apply_dedup_index_batch must reject invalid band configs with
     ValueError even under python -O (was a bare assert)."""
@@ -342,32 +265,6 @@ def test_session_paths_all_null_session_is_null_path(spark, tmp_path):
 # --- round-4 advisor findings (ADVICE.md r4) ---
 
 
-def test_cli_store_after_subcommand(tmp_path, spark):
-    """ADVICE r4: the docstring advertises `ingest FILE [--store DIR]`
-    but --store only existed on the root parser, so the trailing form
-    raised 'unrecognized arguments'. Both placements must parse."""
-    import contextlib
-    import io
-    import json
-
-    from dynamic_etl_pipeline_spark.__main__ import main
-
-    f = tmp_path / "t.csv"
-    f.write_text("a,b\n1,x\n2,y\n")
-    store = str(tmp_path / "trailing_store")
-    out = io.StringIO()
-    with contextlib.redirect_stdout(out):
-        rc = main(["ingest", str(f), "--store", store])
-    assert rc == 0
-    assert json.loads(out.getvalue().strip().splitlines()[-1])["stored"] == 2
-    # and the store really landed at the trailing --store path
-    out = io.StringIO()
-    with contextlib.redirect_stdout(out):
-        main(["records", "--latest", "2", "--store", store])
-    rows = [json.loads(x) for x in out.getvalue().strip().splitlines()]
-    assert {r["b"] for r in rows} == {"x", "y"}
-
-
 def test_max_ts_footer_handles_directory_and_missing_column(spark, tmp_path):
     """ADVICE r4: _max_ts_from_footer raised on Spark's directory-style
     parquet and on frames without a ts column, defeating the documented
@@ -417,39 +314,6 @@ def test_max_ts_footer_handles_directory_and_missing_column(spark, tmp_path):
     ).parquet(no_ts)
     assert _max_ts_from_footer(no_ts) is None  # no ts column -> fallback
     assert _max_ts_from_footer(str(tmp_path / "missing.parquet")) is None
-
-
-def test_diff_pads_drift_columns_with_native_dtype(spark, tmp_path):
-    """ADVICE r4: schema-drift pad columns were NULL cast to STRING
-    regardless of the column's real dtype, so exceptAll compared typed
-    values via string coercion. The pad now uses the dtype of the side
-    that has the column."""
-    import csv
-
-    from dynamic_etl_pipeline_spark.pipeline import EtlPipeline
-
-    f1 = tmp_path / "v1.csv"
-    with open(f1, "w", newline="") as fh:
-        w = csv.writer(fh)
-        w.writerow(["rec_id", "name"])
-        w.writerows([[1, "a"], [2, "b"]])
-    f2 = tmp_path / "v2.csv"
-    with open(f2, "w", newline="") as fh:
-        w = csv.writer(fh)
-        w.writerow(["rec_id", "name", "num"])
-        w.writerows([[2, "b2", 7], [3, "c", 9]])
-
-    pipe = EtlPipeline(spark, str(tmp_path / "store"))
-    pipe.ingest(str(f1))
-    pipe.upsert(str(f2), keys=["rec_id"])
-
-    out = pipe.diff(1)
-    dts = dict(out.dtypes)
-    assert dts["num"] != "string"  # native dtype, not a string pad
-    changes = {(r["rec_id"], r["num"], r["change"])
-               for r in out.select("rec_id", "num", "change").collect()}
-    assert (3, 9, "added") in changes
-    assert (2, None, "removed") in changes
 
 
 def test_bnlj_condition_found_beyond_three_lines():

@@ -91,3 +91,19 @@ def test_avro_degrades_clearly(spark, tmp_path):
 
     with pytest.raises(NotImplementedError, match="spark-avro"):
         read_avro(spark, str(tmp_path / "x.avro")).collect()
+
+
+def test_merge_null_keys_classified_by_presence(spark):
+    target = spark.createDataFrame([(None, "t-null"), (1, "t1")], "k int, v string")
+    source = spark.createDataFrame([(None, "s-null"), (1, "s1")], "k int, v string")
+    # NULL keys never equi-match: target NULL-key row is carried, source
+    # NULL-key row inserts WITH ITS OWN values
+    key = lambda t: (t[0] is not None, t[0] or 0, t[1])
+    got = sorted(((r["k"], r["v"]) for r in
+                  merge_upsert(target, source, ["k"]).collect()), key=key)
+    assert got == [(None, "s-null"), (None, "t-null"), (1, "s1")]
+    # insert=False must still carry the NULL-key target row
+    kept = sorted(((r["k"], r["v"]) for r in
+                   merge_upsert(target, source, ["k"], insert=False).collect()),
+                  key=key)
+    assert kept == [(None, "t-null"), (1, "s1")]

@@ -4,6 +4,7 @@ fixtures (the reference's app.py:296-366 loop, Spark-shaped).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -531,3 +532,270 @@ def test_widen_dtype_lattice():
     assert _widen_dtype("decimal(12,2)", "bigint") == "double"
     assert _widen_dtype("bigint", "string") == "string"
     assert _widen_dtype("date", "timestamp") == "string"
+
+
+def test_upsert_swap_crash_recovery(spark, tmp_path):
+    import shutil
+    from pathlib import Path
+
+    from dynamic_etl_pipeline_spark.pipeline import EtlPipeline
+
+    store_dir = str(tmp_path / "crash_store")
+    pipe = EtlPipeline(spark, store_dir)
+    pipe.upsert(df=spark.createDataFrame([("k1", "v1")], ["rec_id", "content"]),
+                keys=["rec_id"])
+    records = Path(pipe.records_path)
+
+    # (a) crash between the two renames: store moved to .old, committed
+    # staging present -> recovery must roll FORWARD to the staging state
+    tmp = records.with_name("records.upserting")
+    shutil.copytree(records, tmp)  # committed merge result (has _SUCCESS)
+    records.rename(records.with_name("records.old"))
+    assert {r["rec_id"] for r in pipe.records().collect()} == {"k1"}
+    assert records.exists() and not tmp.exists()
+
+    # (b) crash mid-staging-write: uncommitted staging + store renamed
+    # away -> recovery must roll BACK to the old store
+    tmp.mkdir()
+    (tmp / "part-0.parquet").write_bytes(b"garbage")  # no _SUCCESS
+    records.rename(records.with_name("records.old"))
+    assert {r["rec_id"] for r in pipe.records().collect()} == {"k1"}
+    assert not tmp.exists() and not records.with_name("records.old").exists()
+
+
+def test_upsert_crash_before_archive_rolls_forward(spark, tmp_path):
+    """Crash AFTER the staging _SUCCESS but BEFORE the store->archive
+    rename: store still present + committed staging. Recovery must
+    complete the swap (archive a generation, promote staging) — the
+    commit point is the _SUCCESS marker, not the first rename."""
+    import shutil
+    from pathlib import Path
+
+    from dynamic_etl_pipeline_spark.pipeline import EtlPipeline
+
+    store_dir = str(tmp_path / "crash_fwd_store")
+    pipe = EtlPipeline(spark, store_dir)
+    pipe.upsert(df=spark.createDataFrame([("k1", "v1")], ["rec_id", "content"]),
+                keys=["rec_id"])
+    pipe.upsert(df=spark.createDataFrame([("k1", "v2"), ("k2", "v2")],
+                                         ["rec_id", "content"]),
+                keys=["rec_id"])
+    records = Path(pipe.records_path)
+    n_gens_before = len(pipe.history())
+
+    # simulate: committed staging alongside a still-present store
+    tmp = records.with_name("records.upserting")
+    shutil.copytree(records, tmp)
+    got = {r["rec_id"] for r in pipe.records().collect()}
+    assert got == {"k1", "k2"}
+    assert not tmp.exists()
+    # the displaced store was archived, not discarded
+    assert len(pipe.history()) == n_gens_before + 1
+
+
+def test_cli_store_after_subcommand(tmp_path, spark):
+    """ADVICE r4: the docstring advertises `ingest FILE [--store DIR]`
+    but --store only existed on the root parser, so the trailing form
+    raised 'unrecognized arguments'. Both placements must parse."""
+    import contextlib
+    import io
+    import json
+
+    from dynamic_etl_pipeline_spark.__main__ import main
+
+    f = tmp_path / "t.csv"
+    f.write_text("a,b\n1,x\n2,y\n")
+    store = str(tmp_path / "trailing_store")
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        rc = main(["ingest", str(f), "--store", store])
+    assert rc == 0
+    assert json.loads(out.getvalue().strip().splitlines()[-1])["stored"] == 2
+    # and the store really landed at the trailing --store path
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        main(["records", "--latest", "2", "--store", store])
+    rows = [json.loads(x) for x in out.getvalue().strip().splitlines()]
+    assert {r["b"] for r in rows} == {"x", "y"}
+
+
+def test_diff_pads_drift_columns_with_native_dtype(spark, tmp_path):
+    """ADVICE r4: schema-drift pad columns were NULL cast to STRING
+    regardless of the column's real dtype, so exceptAll compared typed
+    values via string coercion. The pad now uses the dtype of the side
+    that has the column."""
+    import csv
+
+    from dynamic_etl_pipeline_spark.pipeline import EtlPipeline
+
+    f1 = tmp_path / "v1.csv"
+    with open(f1, "w", newline="") as fh:
+        w = csv.writer(fh)
+        w.writerow(["rec_id", "name"])
+        w.writerows([[1, "a"], [2, "b"]])
+    f2 = tmp_path / "v2.csv"
+    with open(f2, "w", newline="") as fh:
+        w = csv.writer(fh)
+        w.writerow(["rec_id", "name", "num"])
+        w.writerows([[2, "b2", 7], [3, "c", 9]])
+
+    pipe = EtlPipeline(spark, str(tmp_path / "store"))
+    pipe.ingest(str(f1))
+    pipe.upsert(str(f2), keys=["rec_id"])
+
+    out = pipe.diff(1)
+    dts = dict(out.dtypes)
+    assert dts["num"] != "string"  # native dtype, not a string pad
+    changes = {(r["rec_id"], r["num"], r["change"])
+               for r in out.select("rec_id", "num", "change").collect()}
+    assert (3, 9, "added") in changes
+    assert (2, None, "removed") in changes
+
+
+# -- store reads: footer schema vs Spark's mergeSchema read -----------------
+
+
+def _merge_schema_read(spark, path):
+    return spark.read.option("mergeSchema", "true").parquet(path)
+
+
+def _same_read(got, want):
+    assert got.schema == want.schema
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
+
+def test_store_reads_match_merge_schema_through_drift(spark, tmp_path, fixtures_dir):
+    """After every op of a drift sequence, records() and snapshot(1)
+    read what a mergeSchema read reads, and their schema comes from the
+    footers (no fallback). Version 1 holds a CSV and a JSONL batch with
+    different column orders, so the file order decides the columns."""
+    from dynamic_etl_pipeline_spark.pipeline import _footer_schema
+
+    def write(name, text):
+        f = tmp_path / name
+        f.write_text(text)
+        return str(f)
+
+    pipe = EtlPipeline(spark, str(tmp_path / "store"))
+    ops = [
+        lambda: pipe.ingest(write("a.csv", "rec_id,name,city\nr1,ann,oslo\nr2,bob,rome\n")),
+        lambda: pipe.ingest(write("b.jsonl", '{"city": "lima", "rec_id": "r3", "name": "cy"}\n')),
+        lambda: pipe.ingest(write("c.csv", "rec_id,name,city,tier\nr4,dee,kyiv,gold\n")),
+        lambda: pipe.ingest(write("d.jsonl", '{"rec_id": "r5", "name": "eve"}\n')),
+        lambda: pipe.ingest(str(fixtures_dir / "notes.txt")),
+        lambda: pipe.upsert(write("e.csv", "rec_id,name,city\nr1,ann2,oslo\nr9,fay,bern\n"),
+                            keys=["rec_id"]),
+    ]
+    versions = []
+    for op in ops:
+        versions.append(op().schema_version)
+        reads = [(pipe.records(), pipe.records_path)]
+        if pipe.history():
+            reads.append((pipe.snapshot(1), pipe.history()[0]["path"]))
+        for got, path in reads:
+            assert _footer_schema(spark, path) is not None, path
+            _same_read(got, _merge_schema_read(spark, path))
+    assert versions == [1, 1, 2, 3, 4, 5]
+    assert [h["generation"] for h in pipe.history()] == [1]
+
+
+def _edge_store(spark, root, case):
+    """Two partitions whose footers drift in one way each."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def part(df, v):
+        df.write.parquet(f"{root}/_schema_version={v}")
+
+    if case.startswith("name_case"):
+        part(spark.createDataFrame([("a", 1)], ["Name", "x"]), 1)
+        part(spark.createDataFrame([("b", 2)], ["name", "x"]), 2)
+    elif case == "contains_null":
+        part(spark.createDataFrame(
+            [([1],)], T.StructType([T.StructField(
+                "a", T.ArrayType(T.IntegerType(), containsNull=False), False)])), 1)
+        part(spark.createDataFrame([([None],)], "a array<int>"), 2)
+    elif case == "decimal_precision":
+        part(spark.sql("SELECT CAST(1.5 AS DECIMAL(5,2)) AS v"), 1)
+        part(spark.sql("SELECT CAST(2.5 AS DECIMAL(9,2)) AS v"), 2)
+    elif case == "partition_column_in_file":
+        part(spark.sql("SELECT 1 AS _schema_version, 'x' AS s"), 1)
+        part(spark.sql("SELECT 'y' AS s"), 2)
+    elif case == "foreign_writer":
+        part(spark.createDataFrame([(1, "x")], "id long, s string"), 1)
+        (root / "_schema_version=2").mkdir()
+        pq.write_table(pa.table({"id": [2], "t": ["y"]}),
+                       str(root / "_schema_version=2" / "part-0.parquet"))
+
+
+@pytest.mark.parametrize("case,fast", [
+    ("name_case_insensitive", True),
+    ("name_case_sensitive", True),
+    ("contains_null", True),
+    ("decimal_precision", False),   # Spark widens; the fold does not
+    ("partition_column_in_file", False),  # its position differs if declared
+    ("foreign_writer", False),      # no Spark schema in the footer
+])
+def test_store_read_edge_cases_match_spark(spark, tmp_path, case, fast):
+    from dynamic_etl_pipeline_spark.pipeline import _footer_schema, _read_store
+
+    root = tmp_path / "records"
+    _edge_store(spark, root, case)
+    flag = "true" if case == "name_case_sensitive" else "false"
+    before = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", flag)
+    try:
+        assert (_footer_schema(spark, str(root)) is not None) == fast
+        _same_read(_read_store(spark, str(root)), _merge_schema_read(spark, str(root)))
+    finally:
+        spark.conf.set("spark.sql.caseSensitive", before)
+
+
+def test_records_schedules_no_job(spark, tmp_path, fixtures_dir):
+    """records() declares the footers' schema instead of running the
+    mergeSchema job: building the frame schedules nothing."""
+    pipe = EtlPipeline(spark, str(tmp_path / "store"))
+    pipe.ingest(str(fixtures_dir / "notes.txt"))
+    pipe.ingest(str(fixtures_dir / "customers.csv"))
+    sc = spark.sparkContext
+    group = "records-read-probe"
+    sc.setJobGroup(group, "records() without an action must schedule nothing")
+    try:
+        df = pipe.records()
+    finally:
+        sc.setJobGroup("records-read-post", "actions after the read")
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.count() == 15
+
+
+def test_upsert_on_type_drifted_store_points_at_migrate(spark, tmp_path):
+    """Every store read gives the same repair hint, not only records():
+    an upsert into a bigint/double drifted store names migrate()."""
+    records = tmp_path / "store" / "records"
+    spark.createDataFrame([("a", 1)], ["rec_id", "amount"]).write.parquet(
+        str(records / "_schema_version=1"))
+    spark.createDataFrame([("b", 2.5)], ["rec_id", "amount"]).write.parquet(
+        str(records / "_schema_version=2"))
+    pipe = EtlPipeline(spark, str(tmp_path / "store"))
+    batch = spark.createDataFrame([("a", 3.0)], ["rec_id", "amount"])
+    with pytest.raises(RuntimeError, match="migrate"):
+        pipe.upsert(df=batch, keys=["rec_id"])
+
+
+def test_merge_schema_read_has_one_home():
+    """The mergeSchema read is the store-read helper's fallback and
+    appears nowhere else in the package."""
+    import inspect
+    from pathlib import Path
+
+    import dynamic_etl_pipeline_spark as pkg
+    from dynamic_etl_pipeline_spark.pipeline import _read_store
+
+    needle = 'option("mergeSchema"'
+    root = Path(pkg.__file__).parent
+    counts = {
+        str(p.relative_to(root)): p.read_text().count(needle)
+        for p in sorted(root.rglob("*.py"))
+    }
+    assert {k: n for k, n in counts.items() if n} == {"pipeline.py": 1}
+    assert needle in inspect.getsource(_read_store)
