@@ -132,6 +132,16 @@ def _footer_schema_json(path: str, size: int, mtime_ns: int) -> str | None:
     return None if raw is None else raw.decode()
 
 
+def _file_schema(spark: SparkSession, path: str) -> T.StructType:
+    """One part file's schema: the Catalyst JSON in its footer, or a
+    Spark read of that file when its writer left the key out."""
+    st = os.stat(path)
+    raw = _footer_schema_json(path, st.st_size, st.st_mtime_ns)
+    if raw is None:
+        return spark.read.parquet(path).schema
+    return T.StructType.fromJson(json.loads(raw))
+
+
 def _merge_type(a: T.DataType, b: T.DataType, case_sensitive: bool) -> T.DataType:
     """``StructType.merge`` restated: the left field's name and metadata
     win, nullability ORs, and leaf types must be equal (Spark's own
@@ -657,11 +667,13 @@ class EtlPipeline:
         with the union dtype, and a column whose TYPE drifted (e.g. an
         int batch followed by a double batch) is cast to the widened
         union dtype (ADVICE r5: padding alone left type conflicts).
-        The union schema is computed from the per-partition parquet
-        footers directly (NOT a mergeSchema read — Spark refuses to
+        The union schema is computed from every part file's parquet
+        footer directly (NOT a mergeSchema read — Spark refuses to
         merge long/double footers, so a type-drifted store can't even
-        be read until migrated; this makes migrate() the repair path),
-        with numeric widening: integers widen to the larger integer,
+        be read until migrated; this makes migrate() the repair path).
+        One partition can hold several schemas: a batch whose types
+        drift under an unchanged key set keeps its schema version. The
+        widening is numeric: integers widen to the larger integer,
         any integer/fractional mix widens to double, and a
         numeric/string conflict widens to string. Swaps use the same
         atomic per-partition rename as compact(). The
@@ -680,39 +692,48 @@ class EtlPipeline:
             self._recover_records()
             if not store.exists():
                 return 0
-            # union schema from per-partition footers with numeric
+            # union schema from every part file's footer with numeric
             # widening (mergeSchema would refuse long/double drift)
             part_schemas = {
-                part_dir: dict(self.spark.read.parquet(str(part_dir)).dtypes)
+                part_dir: {f: _file_schema(self.spark, f)
+                           for f in _leaf_files(str(part_dir))}
                 for part_dir in sorted(store.glob("_schema_version=*"))
             }
             union_cols: list[str] = []
             dtypes: dict[str, str] = {}
-            for types in part_schemas.values():
-                for c, t in types.items():
-                    if c == "_schema_version":
-                        continue
-                    if c not in dtypes:
-                        union_cols.append(c)
-                        dtypes[c] = t
-                    else:
-                        dtypes[c] = _widen_dtype(dtypes[c], t)
+            for schemas in part_schemas.values():
+                for schema in schemas.values():
+                    for field in schema.fields:
+                        c, t = field.name, field.dataType.simpleString()
+                        if c == "_schema_version":
+                            continue
+                        if c not in dtypes:
+                            union_cols.append(c)
+                            dtypes[c] = t
+                        else:
+                            dtypes[c] = _widen_dtype(dtypes[c], t)
             rewritten = 0
-            for part_dir, part_types in part_schemas.items():
-                part = self.spark.read.parquet(str(part_dir))
-                missing = [c for c in union_cols if c not in part_types]
-                drifted = [
-                    c for c in union_cols
-                    if c in part_types and part_types[c] != dtypes[c]
-                ]
-                if not missing and not drifted:
+            for part_dir, schemas in part_schemas.items():
+                groups: dict[T.StructType, list[str]] = {}
+                for f, schema in schemas.items():
+                    groups.setdefault(schema, []).append(f)
+                types = {
+                    g: {x.name: x.dataType.simpleString() for x in g.fields}
+                    for g in groups
+                }
+                if all(types[g].get(c) == dtypes[c]
+                       for g in groups for c in union_cols):
                     continue
-                out = part
-                for c in missing:
-                    out = out.withColumn(c, F.lit(None).cast(dtypes[c]))
-                for c in drifted:
-                    out = out.withColumn(c, F.col(c).cast(dtypes[c]))
-                out = out.select(*union_cols)
+                # each group of same-schema files is read with its own
+                # schema, NULL-padded and cast to the union, then unioned
+                out = functools.reduce(DataFrame.unionByName, [
+                    self.spark.read.schema(g).parquet(*files).select(*[
+                        (F.col(c) if c in types[g] else F.lit(None))
+                        .cast(dtypes[c]).alias(c)
+                        for c in union_cols
+                    ])
+                    for g, files in groups.items()
+                ])
                 tmp = part_dir.with_name(part_dir.name + ".migrating")
                 out.write.mode("overwrite").parquet(str(tmp))
                 old = part_dir.with_name(part_dir.name + ".old")

@@ -1,17 +1,23 @@
 """Structured Streaming queries, driver-checkable (SURVEY §2.9).
 
 Each runs the REAL micro-batch engine (readStream over the fixture,
-availableNow trigger, memory sink in complete mode) and returns the
-drained result. Because the windowed aggregations are the same logical
-plans as their batch twins in queries/events.py, the streaming results
-are held to full DuckDB oracles — not just rows-only checks. The
-running per-user totals are a native update-mode aggregate whose
-decimal state sum bit-matches the batch DECIMAL aggregate. The custom
-applyInPandasWithState sessionizer carries an oracle too: its
-EventTimeTimeout finalization equals the batch lag/cumsum sessionizer.
-streaming_scatter_pc1 drains through the incremental scatter sink and
-inherits the batch PC1 oracle unchanged (additive integer sufficient
-statistics).
+availableNow trigger, memory sink) and returns the drained result.
+Because the windowed aggregations are the same logical plans as their
+batch twins in queries/events.py, the streaming results are held to
+full DuckDB oracles — not just rows-only checks. The running per-user
+totals are a native update-mode aggregate whose decimal state sum
+bit-matches the batch DECIMAL aggregate. streaming_scatter_pc1 drains
+through the incremental scatter sink and inherits the batch PC1 oracle
+unchanged (additive integer sufficient statistics).
+
+Watermark-closure queries — chained windows, dedup→rollup, the outer
+stream-stream joins and the applyInPandasWithState sessionizer — emit
+only once the watermark passes (append-mode windows, outer-join null
+extension, state timeouts). They all drain through ``_sentinel_drain``:
+the fixture replays as batch 0, then two far-future sentinel batches
+push the watermark past every real event, and the sentinels' own rows
+are filtered from the drain. The four purchase→click interval joins
+(inner, left, right, full) are one ``_purchase_click_join``.
 
 Multi-batch semantics (watermark-delayed emission, state across
 triggers, dedup of replayed keys) are exercised in
@@ -21,9 +27,22 @@ files and replayed one file per trigger.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import datetime as dt
+import os
+import shutil
+import tempfile
+import time
+from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
+
+from ..catalog import table_path
 from ..materialize import materialize
+from ..session import tune
 from ..streaming.rollups import (
     chained_hourly_6h,
     dedup_then_rollup,
@@ -34,7 +53,7 @@ from ..streaming.rollups import (
     user_running_totals,
 )
 from ..streaming.sinks import run_available_now_to_memory
-from ..streaming.source import stream_events
+from ..streaming.source import stream_events, stream_events_dir
 from .registry import query
 
 
@@ -49,9 +68,6 @@ def _max_ts_from_footer(path: str):
     instead of the exception propagating out of every streaming drain
     (ADVICE r4)."""
     import glob
-    import os
-
-    import pyarrow.parquet as pq
 
     if os.path.isdir(path):
         parts = sorted(
@@ -81,15 +97,25 @@ def _max_ts_from_footer(path: str):
         return None
 
 
-def _stage_event_sentinels(spark: SparkSession, sf_dir: str,
-                           sentinel_rows, offsets=(10, 20)):
-    """Stage the events fixture as micro-batch 0 followed by far-future
-    sentinel batches whose only job is to push the watermark past every
-    real event, forcing append-mode state to flush at end of input (the
-    streaming analogue of a Kafka punctuation message).
+# Sentinel rows as (user_id, event_type): a reserved event_type, or a
+# click and a purchase of two different users so they never join.
+_MARKER = [(-1, "__sentinel__")]
+_CLICK_AND_PURCHASE = [(-1, "click"), (-2, "purchase")]
+# a join row is real when neither side is a sentinel (negative id)
+_REAL_JOIN_IDS = "coalesce(purchase_id, 0) >= 0 AND coalesce(click_id, 0) >= 0"
 
-    ``sentinel_rows(batch_no, sent_ts) -> list[tuple]`` builds each
-    sentinel batch's rows in the raw on-disk schema. Returns
+
+def _stage_event_sentinels(spark: SparkSession, sf_dir: str, sentinels,
+                           redeliver: bool = False):
+    """Stage the events fixture as micro-batch 0 followed by two
+    far-future sentinel batches (10 and 20 days past the last event)
+    whose only job is to push the watermark past every real event,
+    forcing append-mode state to flush at end of input (the streaming
+    analogue of a Kafka punctuation message). With ``redeliver`` a copy
+    of batch 0 follows it, the at-least-once redelivery failure mode.
+
+    ``sentinels`` lists each sentinel batch's rows as
+    ``(user_id, event_type)``; the rows get negative event ids. Returns
     (stage_dir: Path, raw_schema); the caller removes the dir.
 
     Sentinel files are written with PYARROW against the fixture file's
@@ -100,64 +126,84 @@ def _stage_event_sentinels(spark: SparkSession, sf_dir: str,
     streaming). The pyarrow write is <10 ms and byte-compatible since
     it reuses the exact on-disk arrow schema.
     """
-    import shutil
-    import tempfile
-    import time as _time
-    import os
-    from pathlib import Path
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-
-    from ..catalog import table_path
-
     src = table_path(sf_dir, "events")
     raw = spark.read.parquet(src)  # ts as stored: long nanos or timestamp
     max_ts = _max_ts_from_footer(src)
     if max_ts is None:  # stats missing (never for our fixtures): one action
         max_ts = raw.agg(F.max("ts")).collect()[0][0]
-    from pyspark.sql.types import LongType
-
     if isinstance(raw.schema["ts"].dataType, LongType) and not isinstance(
         max_ts, int
     ):
         # footer gave a datetime but the nanosAsLong read mode stores ts
         # as long nanos; µs-floor is fine — the sentinel adds whole days
-        import datetime as _dt
-
         max_ts = (
-            (max_ts - _dt.datetime(1970, 1, 1))
-            // _dt.timedelta(microseconds=1) * 1000
+            (max_ts - dt.datetime(1970, 1, 1))
+            // dt.timedelta(microseconds=1) * 1000
         )
-    if isinstance(max_ts, int):  # long-nanos fixture layout
-        def plus_days(base, days):
-            return base + days * 24 * 3600 * 10**9
-    else:
-        import datetime as _dt
-
-        def plus_days(base, days):
-            return base + _dt.timedelta(days=days)
+    day = 24 * 3600 * 10**9 if isinstance(max_ts, int) else dt.timedelta(days=1)
 
     stage = Path(tempfile.mkdtemp(prefix="stream_stage_"))
-    shutil.copy(src, stage / "000_events.parquet")
+    first = stage / "000_events.parquet"
+    shutil.copy(src, first)
+    if redeliver:  # the file source orders micro-batches by mtime
+        replay = stage / "000b_replay.parquet"
+        shutil.copy(first, replay)
+        base = os.path.getmtime(first) + 0.25
+        os.utime(replay, (base, base))
     disk_schema = pq.read_schema(src)
-    for i, offset_days in enumerate(offsets, start=1):
-        sent_ts = plus_days(max_ts, offset_days)
-        batch = sentinel_rows(i, sent_ts)
-        cols = list(zip(*batch))
-        arrays = [
-            pa.array(list(col), type=disk_schema.field(j).type)
-            for j, col in enumerate(cols)
-        ]
-        tbl = pa.Table.from_arrays(arrays, schema=disk_schema)
+    n = len(sentinels)
+    for i in (1, 2):
+        rows = [(-(n * i + k), max_ts + 10 * i * day, user, event_type, 0.0, "{}")
+                for k, (user, event_type) in enumerate(sentinels)]
         dest = stage / f"{i:03d}_sentinel.parquet"
-        pq.write_table(tbl, str(dest))
-        # file source orders micro-batches by modification time
-        now = _time.time() + i
+        pq.write_table(
+            pa.Table.from_arrays([list(c) for c in zip(*rows)], schema=disk_schema),
+            str(dest),
+        )
+        now = time.time() + i
         os.utime(dest, (now, now))
     return stage, raw.schema
+
+
+def _sentinel_drain(spark: SparkSession, sf_dir: str, sentinels, build,
+                    keep: str, *, redeliver: bool = False) -> DataFrame:
+    """Drain ``build(events)`` in append mode over the sentinel replay
+    (``_stage_event_sentinels``, one file per trigger), so every
+    watermark-gated row flushes before end of input; return the rows
+    that pass ``keep`` (a SQL predicate dropping the sentinels' own
+    rows), materialized before the staging dir is removed."""
+    tune(spark)
+    stage, schema = _stage_event_sentinels(spark, sf_dir, sentinels, redeliver)
+    try:
+        events = stream_events_dir(spark, str(stage), schema,
+                                   max_files_per_trigger=1)
+        drained = run_available_now_to_memory(build(events), output_mode="append")
+        return drained.filter(keep).transform(materialize)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def _purchase_click_join(events: DataFrame, how: str) -> DataFrame:
+    """Each purchase joined to the same user's clicks in the preceding
+    hour, as a Spark ``how`` (inner, left, right, full) over one events
+    stream. Both sides are watermarked by 2 hours, so join state is
+    evicted once event time passes the interval bound; inner matches
+    emit eagerly, outer rows null-extend once the watermark proves no
+    partner can still arrive."""
+    def side(event_type: str, p: str, id_col: str) -> DataFrame:
+        return (
+            events.filter(F.col("event_type") == event_type)
+            .select(F.col("user_id").alias(f"{p}_user"),
+                    F.col("ts").alias(f"{p}_ts"),
+                    F.col("event_id").alias(id_col))
+            .withWatermark(f"{p}_ts", "2 hours")
+        )
+
+    return side("purchase", "p", "purchase_id").join(
+        side("click", "c", "click_id"),
+        F.expr("c_user = p_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts < p_ts"),
+        how,
+    ).select("purchase_id", "click_id")
 
 
 @query("streaming_chained_windows", oracle="""
@@ -174,34 +220,12 @@ def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chained stateful window aggregation (hourly -> 6-hourly) in one
     streaming query. Append mode is mandatory for multiple stateful
     operators, so nothing flushes until the watermark passes a window's
-    end — the replay appends far-future sentinel batches to close out
-    every real window, then filters the sentinels' own rows (their
-    reserved event_type) from the drain. The result is held to the full
-    batch oracle, exactly like the single-agg rollups."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..session import tune
-    from ..streaming.source import stream_events_dir
-
-    tune(spark)
-    stage, schema = _stage_event_sentinels(
-        spark, sf_dir,
-        lambda i, ts: [(-i, ts, -1, "__sentinel__", 0.0, "{}")],
-    )
-    try:
-        events = stream_events_dir(spark, str(stage), schema,
-                                   max_files_per_trigger=1)
-        drained = run_available_now_to_memory(
-            chained_hourly_6h(events), output_mode="append"
-        )
-        return (
-            drained.filter(F.col("event_type") != "__sentinel__")
-            .transform(materialize)
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    end — the sentinel replay closes out every real window, and the
+    sentinels' own rows (their reserved event_type) are filtered from
+    the drain. The result is held to the full batch oracle, exactly
+    like the single-agg rollups."""
+    return _sentinel_drain(spark, sf_dir, _MARKER, chained_hourly_6h,
+                           "event_type != '__sentinel__'")
 
 
 @query("streaming_dedup_then_rollup", oracle="""
@@ -218,39 +242,8 @@ def streaming_dedup_then_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus watermark-flush sentinels. The dedup store must absorb the
     redelivered event_ids so the rollup equals the batch result over a
     SINGLE copy — which is exactly what the oracle computes."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..session import tune
-    from ..streaming.source import stream_events_dir
-
-    tune(spark)
-    stage, schema = _stage_event_sentinels(
-        spark, sf_dir,
-        lambda i, ts: [(-i, ts, -1, "__sentinel__", 0.0, "{}")],
-    )
-    try:
-        # redeliver the entire first batch between batch 0 and the
-        # sentinels (mtime orders the file source's micro-batches)
-        first = stage / "000_events.parquet"
-        replay = stage / "000b_replay.parquet"
-        shutil.copy(first, replay)
-        base = os.path.getmtime(first) + 0.25
-        os.utime(replay, (base, base))
-
-        events = stream_events_dir(spark, str(stage), schema,
-                                   max_files_per_trigger=1)
-        drained = run_available_now_to_memory(
-            dedup_then_rollup(events), output_mode="append"
-        )
-        return (
-            drained.filter(F.col("event_type") != "__sentinel__")
-            .transform(materialize)
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return _sentinel_drain(spark, sf_dir, _MARKER, dedup_then_rollup,
+                           "event_type != '__sentinel__'", redeliver=True)
 
 
 @query("streaming_tumbling_rollup", oracle="""
@@ -320,8 +313,6 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique, so the oracle asserts zero over-drop (every event must
     survive); duplicate-suppression across replayed batches is covered
     in tests/test_streaming.py."""
-    from pyspark.sql import functions as F
-
     deduped = dedup_within_watermark(stream_events(spark, sf_dir))
     return run_available_now_to_memory(
         deduped.select(
@@ -365,8 +356,6 @@ def streaming_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join state to watermark — then rolls up value by segment and hour.
     At scale the static side is a slowly-refreshed table; re-planning
     per micro-batch picks up new snapshots."""
-    from pyspark.sql import functions as F
-
     from ..catalog import load_table
 
     dim = load_table(spark, sf_dir, "customer").select(
@@ -405,38 +394,11 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's clicks in the preceding hour, both sides watermarked so join
     state is evicted once event time passes the interval bound. Inner
     matches emit eagerly, so the availableNow drain equals the batch
-    join exactly (the oracle)."""
-    from pyspark.sql import functions as F
-
-    clicks = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("c_ts", "2 hours")
+    join exactly (the oracle) with no sentinel replay."""
+    return run_available_now_to_memory(
+        _purchase_click_join(stream_events(spark, sf_dir), "inner"),
+        output_mode="append",
     )
-    purchases = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr("""
-            c_user = p_user
-            AND c_ts >= p_ts - INTERVAL 1 HOUR
-            AND c_ts < p_ts
-        """),
-    ).select("purchase_id", "click_id")
-    return run_available_now_to_memory(joined, output_mode="append")
 
 
 @query("streaming_stream_stream_left_join", oracle="""
@@ -457,66 +419,17 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
 
     End-of-input is the classic trap: the watermark only advances when
     newer data arrives, so a naive drain never flushes the final
-    unmatched rows. The replay therefore stages the fixture as batch 1
-    followed by far-future sentinel batches (one click + one purchase
-    under reserved negative ids) whose only job is to push the
-    watermark past every real event and force the outer-state flush —
-    the streaming analogue of a Kafka heartbeat/punctuation message.
-    After the flush, the drain equals the batch LEFT JOIN exactly, so
-    this holds a full oracle, not a rows-only check.
+    unmatched rows. The sentinel replay (one click + one purchase per
+    sentinel batch, under reserved negative ids) pushes the watermark
+    past every real event and forces the outer-state flush — the
+    streaming analogue of a Kafka heartbeat/punctuation message. After
+    the flush, the drain equals the batch LEFT JOIN exactly, so this
+    holds a full oracle, not a rows-only check.
     """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..session import tune
-    from ..streaming.source import stream_events_dir
-
-    tune(spark)
-    stage, schema = _stage_event_sentinels(
-        spark, sf_dir,
-        lambda i, ts: [(-(2 * i), ts, -1, "click", 0.0, "{}"),
-                       (-(2 * i + 1), ts, -2, "purchase", 0.0, "{}")],
+    return _sentinel_drain(
+        spark, sf_dir, _CLICK_AND_PURCHASE,
+        lambda events: _purchase_click_join(events, "left"), _REAL_JOIN_IDS,
     )
-    try:
-        events = stream_events_dir(
-            spark, str(stage), schema, max_files_per_trigger=1
-        )
-        clicks = (
-            events.filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-                F.col("event_id").alias("click_id"),
-            )
-            .withWatermark("c_ts", "2 hours")
-        )
-        purchases = (
-            events.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("event_id").alias("purchase_id"),
-            )
-            .withWatermark("p_ts", "2 hours")
-        )
-        joined = purchases.join(
-            clicks,
-            F.expr("""
-                c_user = p_user
-                AND c_ts >= p_ts - INTERVAL 1 HOUR
-                AND c_ts < p_ts
-            """),
-            "leftOuter",
-        ).select("purchase_id", "click_id")
-        drained = run_available_now_to_memory(joined, output_mode="append")
-        # localCheckpoint: materialize before the staging dir is removed
-        return (
-            drained.filter(F.col("purchase_id") >= 0)
-            .transform(materialize)
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @query("streaming_stream_stream_right_join", oracle="""
@@ -537,57 +450,10 @@ def streaming_stream_stream_right_join(spark: SparkSession,
     still arrive; the sentinel replay forces that flush at end of
     input. Held to the full batch RIGHT JOIN oracle.
     """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..session import tune
-    from ..streaming.source import stream_events_dir
-
-    tune(spark)
-    stage, schema = _stage_event_sentinels(
-        spark, sf_dir,
-        lambda i, ts: [(-(2 * i), ts, -1, "click", 0.0, "{}"),
-                       (-(2 * i + 1), ts, -2, "purchase", 0.0, "{}")],
+    return _sentinel_drain(
+        spark, sf_dir, _CLICK_AND_PURCHASE,
+        lambda events: _purchase_click_join(events, "right"), _REAL_JOIN_IDS,
     )
-    try:
-        events = stream_events_dir(
-            spark, str(stage), schema, max_files_per_trigger=1
-        )
-        clicks = (
-            events.filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-                F.col("event_id").alias("click_id"),
-            )
-            .withWatermark("c_ts", "2 hours")
-        )
-        purchases = (
-            events.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("event_id").alias("purchase_id"),
-            )
-            .withWatermark("p_ts", "2 hours")
-        )
-        joined = purchases.join(
-            clicks,
-            F.expr("""
-                c_user = p_user
-                AND c_ts >= p_ts - INTERVAL 1 HOUR
-                AND c_ts < p_ts
-            """),
-            "rightOuter",
-        ).select("purchase_id", "click_id")
-        drained = run_available_now_to_memory(joined, output_mode="append")
-        return (
-            drained.filter(F.col("click_id") >= 0)
-            .transform(materialize)
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @query("streaming_stream_stream_full_join", oracle="""
@@ -604,67 +470,14 @@ def streaming_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataF
     qualifying click can still arrive AND an unmatched click emits
     once no future purchase's one-hour lookback can reach it. State
     on both sides stays watermark-bounded exactly as in the inner and
-    left variants; the far-future sentinel batches (see
-    streaming_stream_stream_left_join) force the final flush of BOTH
+    left variants; the sentinel replay forces the final flush of BOTH
     outer states, after which the drain equals the batch FULL JOIN
     and holds a full oracle.
     """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..session import tune
-    from ..streaming.source import stream_events_dir
-
-    tune(spark)
-    stage, schema = _stage_event_sentinels(
-        spark, sf_dir,
-        lambda i, ts: [(-(2 * i), ts, -1, "click", 0.0, "{}"),
-                       (-(2 * i + 1), ts, -2, "purchase", 0.0, "{}")],
+    return _sentinel_drain(
+        spark, sf_dir, _CLICK_AND_PURCHASE,
+        lambda events: _purchase_click_join(events, "full"), _REAL_JOIN_IDS,
     )
-    try:
-        events = stream_events_dir(
-            spark, str(stage), schema, max_files_per_trigger=1
-        )
-        clicks = (
-            events.filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-                F.col("event_id").alias("click_id"),
-            )
-            .withWatermark("c_ts", "2 hours")
-        )
-        purchases = (
-            events.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("event_id").alias("purchase_id"),
-            )
-            .withWatermark("p_ts", "2 hours")
-        )
-        joined = purchases.join(
-            clicks,
-            F.expr("""
-                c_user = p_user
-                AND c_ts >= p_ts - INTERVAL 1 HOUR
-                AND c_ts < p_ts
-            """),
-            "fullOuter",
-        ).select("purchase_id", "click_id")
-        drained = run_available_now_to_memory(joined, output_mode="append")
-        # drop sentinel rows from EITHER null-extended side; real rows
-        # (positive ids) and genuine null extensions survive
-        return (
-            drained.filter(
-                (F.coalesce("purchase_id", F.lit(0)) >= 0)
-                & (F.coalesce("click_id", F.lit(0)) >= 0)
-            )
-            .transform(materialize)
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @query("streaming_stateful_sessions", oracle="""
@@ -698,31 +511,11 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     finalize, making the drain equal to the batch lag/cumsum
     sessionizer — a FULL oracle on an applyInPandasWithState operator
     (sessions are pure integer boundaries)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..session import tune
-    from ..streaming.source import stream_events_dir
     from ..streaming.stateful import user_sessions_stateful
 
-    tune(spark)
-    stage, schema = _stage_event_sentinels(
-        spark, sf_dir,
-        lambda i, ts: [(-i, ts, -1, "__sentinel__", 0.0, "{}")],
-    )
-    try:
-        events = stream_events_dir(spark, str(stage), schema,
-                                   max_files_per_trigger=1)
-        drained = run_available_now_to_memory(
-            user_sessions_stateful(events), output_mode="append"
-        )
-        return (
-            drained.filter(F.col("user_id") >= 0)
-            .transform(materialize)
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return _sentinel_drain(spark, sf_dir, _MARKER, user_sessions_stateful,
+                           "user_id >= 0")
+
 
 
 def _pc1_streaming_oracle() -> str:
@@ -743,12 +536,8 @@ def streaming_scatter_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     path inherits the batch oracle unchanged. Multi-batch behavior
     (3-batch replay, fresh-checkpoint skip) is pinned in
     tests/test_streaming.py."""
-    import shutil
-    import tempfile
-
     from ..catalog import load_table
     from ..operators.pca import _quantized, pc1_from_cells, project_pc1
-    from ..session import tune
     from ..streaming.sinks import maintain_scatter_stats
     from .vectors import _KM_SCALE, _PC1_ITERS
 
@@ -803,16 +592,7 @@ def streaming_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver (r6 verdict item 3). The store dir therefore outlives this
     call; atexit reclaims it at interpreter exit."""
     import atexit
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-    from pathlib import Path
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..catalog import table_path
     from ..streaming.sinks import maintain_dedup_index
 
     src = table_path(sf_dir, "documents")
@@ -837,7 +617,7 @@ def streaming_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             dest = stage / f"{i:03d}_docs.parquet"
             pq.write_table(tbl, str(dest))
-            now = _time.time() + i  # file source orders by mtime
+            now = time.time() + i  # file source orders by mtime
             os.utime(dest, (now, now))
         stream = (
             spark.readStream.schema("doc_id long, text string")

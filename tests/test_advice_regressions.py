@@ -5,9 +5,7 @@
   for n < 1, so the downstream slice(…, 0, …) threw at runtime, while
   the DuckDB oracle's range()/generate_series() just emit no rows);
 - simhash64 crashed on NULL/empty text while the MinHash kernel
-  null-guards;
-- salted_join silently produced wrong results for build-side-preserving
-  join types (each unmatched build row replicated per salt).
+  null-guards.
 """
 
 from __future__ import annotations
@@ -17,7 +15,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from dynamic_etl_pipeline_spark.operators.dedup import simhash64, simhash_pairs
-from dynamic_etl_pipeline_spark.operators.skew import salted_join
 from dynamic_etl_pipeline_spark.queries.text import doc_winnow_fingerprint
 from dynamic_etl_pipeline_spark.queries.training import corpus_decontaminate
 
@@ -75,16 +72,6 @@ def test_simhash_null_and_empty_text(spark):
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(4, 5)}
 
 
-def test_salted_join_rejects_build_preserving_types(spark):
-    left = spark.createDataFrame([("a", 1)], ["k", "v"])
-    right = spark.createDataFrame([("a", 1.0), ("b", 2.0)], ["k", "w"])
-    for how in ("right", "full", "outer", "right_outer"):
-        with pytest.raises(ValueError, match="salted_join"):
-            salted_join(left, right, "k", how=how)
-    # probe-preserving types still work
-    assert salted_join(left, right, "k", how="left_anti").count() == 0
-
-
 def test_cdc_chunks_reassemble_exactly(spark, sf_dir):
     from dynamic_etl_pipeline_spark.queries.text import doc_cdc_chunks
 
@@ -131,21 +118,6 @@ def test_cdc_edit_locality(spark, tmp_path):
     # survives the insertion; boundaries re-synchronize after the edit
     assert len(a) > 4
     assert len(set(a) - set(b)) <= 2 and len(set(b) - set(a)) <= 2
-
-
-def test_minhash_kernel_short_final_doc(spark):
-    """A 1-2-token doc at the END of an Arrow batch used to push the
-    boundary-cross indices past the gram array (IndexError)."""
-    from dynamic_etl_pipeline_spark.operators.dedup import minhash_signatures
-
-    df = spark.createDataFrame(
-        [(1, "a reasonably long document with many words in it"),
-         (2, "tiny")],
-        ["doc_id", "text"],
-    ).coalesce(1)
-    sigs = {r["doc_id"] for r in
-            minhash_signatures(df, "doc_id", "text", udf_partitions=1).collect()}
-    assert sigs == {1}  # short doc has no shingles -> dropped, no crash
 
 
 # ---------------------------------------------------------------------------
@@ -209,17 +181,6 @@ def test_unpivot_include_nulls_matches_union_all(spark, sf_dir):
     }
 
 
-def test_dedup_index_bad_band_config_valueerror(spark, tmp_path):
-    """apply_dedup_index_batch must reject invalid band configs with
-    ValueError even under python -O (was a bare assert)."""
-    from dynamic_etl_pipeline_spark.streaming.sinks import apply_dedup_index_batch
-
-    df = spark.createDataFrame([(1, "some text")], ["doc_id", "text"])
-    with pytest.raises(ValueError, match="divisible"):
-        apply_dedup_index_batch(df, 0, str(tmp_path / "idx"),
-                                num_perm=64, bands=13)
-
-
 def test_session_paths_all_null_session_is_null_path(spark, tmp_path):
     """Round-3 ADVICE: a session whose first <=3 events ALL have NULL
     event_type must land in the NULL path group (string_agg semantics),
@@ -260,89 +221,6 @@ def test_session_paths_all_null_session_is_null_path(spark, tmp_path):
     }
     assert None in want, "injection produced no all-NULL session"
     assert got == want
-
-
-# --- round-4 advisor findings (ADVICE.md r4) ---
-
-
-def test_max_ts_footer_handles_directory_and_missing_column(spark, tmp_path):
-    """ADVICE r4: _max_ts_from_footer raised on Spark's directory-style
-    parquet and on frames without a ts column, defeating the documented
-    Spark-action fallback. Directory layouts now glob part files; bad
-    inputs return None instead of raising."""
-    import datetime as dt
-
-    from dynamic_etl_pipeline_spark.queries.streaming import (
-        _max_ts_from_footer,
-    )
-
-    # Spark-written directory: must NOT raise. (Spark's writer omits
-    # min/max stats for this timestamp column, so None -> the caller's
-    # Spark-action fallback — the advisor's exact scenario.)
-    d = str(tmp_path / "ev.parquet")
-    rows = [(i, dt.datetime(2024, 1, 1) + dt.timedelta(hours=i))
-            for i in range(10)]
-    spark.createDataFrame(rows, "id long, ts timestamp").repartition(
-        3
-    ).write.mode("overwrite").parquet(d)
-    got = _max_ts_from_footer(d)  # no exception is the contract
-    if got is not None:
-        assert got.replace(tzinfo=None) == dt.datetime(2024, 1, 1, 9)
-
-    # pyarrow-written multi-file directory (stats present, like the
-    # driver fixtures): the glob must aggregate the max across parts
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pdir = tmp_path / "pa_ev.parquet"
-    pdir.mkdir()
-    for i, hrs in enumerate([[1, 5], [9, 3]]):
-        tbl = pa.table({
-            "id": list(range(len(hrs))),
-            "ts": [dt.datetime(2024, 1, 1) + dt.timedelta(hours=h)
-                   for h in hrs],
-        })
-        pq.write_table(tbl, str(pdir / f"part-{i}.parquet"))
-    got = _max_ts_from_footer(str(pdir))
-    assert got is not None and got.replace(tzinfo=None) == dt.datetime(
-        2024, 1, 1, 9
-    )
-
-    no_ts = str(tmp_path / "nots.parquet")
-    spark.createDataFrame([(1,)], "id long").write.mode(
-        "overwrite"
-    ).parquet(no_ts)
-    assert _max_ts_from_footer(no_ts) is None  # no ts column -> fallback
-    assert _max_ts_from_footer(str(tmp_path / "missing.parquet")) is None
-
-
-def test_bnlj_condition_found_beyond_three_lines():
-    """ADVICE r5: the plan inspector must parse the whole BNLJ detail
-    block, not a 3-line window — a condition further down is not a
-    cross join."""
-    from dynamic_etl_pipeline_spark.plans.inspect import _nested_loops_in
-
-    plan = """== Physical Plan ==
-(1) Scan parquet
-Output [2]: [a, b]
-Location: file:/x
-ReadSchema: struct<a:int>
-
-(2) BroadcastNestedLoopJoin BuildRight, Inner
-Left output [1]: [a]
-Right output [1]: [b]
-Arguments: BuildRight, Inner
-Join condition: (_stop_nd > 3)
-
-(3) Project
-Output [1]: [a]
-"""
-    assert _nested_loops_in(plan) == 0  # _stop_nd gate, 4 lines down
-    assert _nested_loops_in(plan.replace("_stop_nd", "other_col")) == 1
-    assert _nested_loops_in(
-        plan.replace("Join condition: (_stop_nd > 3)", "")) == 1
-    assert _nested_loops_in(
-        plan + "\n(4) CartesianProduct\n") == 1
 
 
 def test_recursive_cte_scales_past_default_row_limit(spark, monkeypatch):

@@ -43,3 +43,25 @@ def test_front_block_spans_tiers_with_oracles():
         not in ("relational", "tpch")
     ]
     assert len(non_rel) >= 15, len(non_rel)
+
+
+def test_tools_import_their_own_checkout():
+    """No tool hard-codes an absolute checkout path on sys.path, so a
+    tool run from a copy of the repo imports that copy's code."""
+    import ast
+    import os
+
+    repo = Path(__file__).resolve().parents[1]
+    for path in sorted((repo / "tools").iterdir()):
+        if not path.is_file():
+            continue
+        text = path.read_text()
+        assert str(repo) not in text, path.name
+        if path.suffix != ".py":
+            continue
+        for node in ast.walk(ast.parse(text)):
+            if (isinstance(node, ast.Call)
+                    and ast.unparse(node.func) == "sys.path.insert"):
+                arg = node.args[1]
+                assert not (isinstance(arg, ast.Constant)
+                            and os.path.isabs(str(arg.value))), path.name

@@ -1259,3 +1259,18 @@ def test_band_and_chunk_caps_keep_their_own_counters(spark):
     assert want_band != want_chunk  # the two calls are distinguishable
     assert counters("minhash-band") == want_band
     assert counters("simhash-chunk") == want_chunk
+
+
+def test_minhash_kernel_short_final_doc(spark):
+    """A 1-2-token doc at the END of an Arrow batch used to push the
+    boundary-cross indices past the gram array (IndexError)."""
+    from dynamic_etl_pipeline_spark.operators.dedup import minhash_signatures
+
+    df = spark.createDataFrame(
+        [(1, "a reasonably long document with many words in it"),
+         (2, "tiny")],
+        ["doc_id", "text"],
+    ).coalesce(1)
+    sigs = {r["doc_id"] for r in
+            minhash_signatures(df, "doc_id", "text", udf_partitions=1).collect()}
+    assert sigs == {1}  # short doc has no shingles -> dropped, no crash

@@ -564,3 +564,32 @@ def test_join_theta_rank_has_no_pair_join(spark, sf_dir):
     a = set(map(tuple, QUERIES["join_theta"](spark, sf_dir).collect()))
     b = set(map(tuple, df.collect()))
     assert a == b
+
+
+def test_bnlj_condition_found_beyond_three_lines():
+    """ADVICE r5: the plan inspector must parse the whole BNLJ detail
+    block, not a 3-line window — a condition further down is not a
+    cross join."""
+    from dynamic_etl_pipeline_spark.plans.inspect import _nested_loops_in
+
+    plan = """== Physical Plan ==
+(1) Scan parquet
+Output [2]: [a, b]
+Location: file:/x
+ReadSchema: struct<a:int>
+
+(2) BroadcastNestedLoopJoin BuildRight, Inner
+Left output [1]: [a]
+Right output [1]: [b]
+Arguments: BuildRight, Inner
+Join condition: (_stop_nd > 3)
+
+(3) Project
+Output [1]: [a]
+"""
+    assert _nested_loops_in(plan) == 0  # _stop_nd gate, 4 lines down
+    assert _nested_loops_in(plan.replace("_stop_nd", "other_col")) == 1
+    assert _nested_loops_in(
+        plan.replace("Join condition: (_stop_nd > 3)", "")) == 1
+    assert _nested_loops_in(
+        plan + "\n(4) CartesianProduct\n") == 1

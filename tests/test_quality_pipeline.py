@@ -515,6 +515,34 @@ def test_migrate_casts_type_drifted_partitions(spark, tmp_path):
     assert pipe.records().count() == 2
 
 
+def test_migrate_repairs_type_drift_inside_one_partition(spark, tmp_path):
+    """Two CSV uploads with the same columns keep one schema version, so
+    an int batch and a double batch share one partition. migrate() must
+    read every part file's footer, not one per partition, or it finds
+    nothing to rewrite and the store stays unreadable."""
+    from pathlib import Path
+
+    first = tmp_path / "first.csv"
+    first.write_text("id,amount\n1,5\n2,7\n")
+    second = tmp_path / "second.csv"
+    second.write_text("id,amount\n3,2.5\n4,1.5\n")
+    pipe = EtlPipeline(spark, str(tmp_path / "store"))
+    pipe.ingest(str(first))
+    pipe.ingest(str(second))
+    parts = sorted(Path(pipe.records_path).glob("_schema_version=*"))
+    assert [p.name for p in parts] == ["_schema_version=1"]
+    with pytest.raises(RuntimeError, match="migrate"):
+        pipe.records()
+
+    assert pipe.migrate() == 1
+    got = pipe.records()
+    assert dict(got.dtypes)["amount"] == "double"
+    assert {r["id"]: r["amount"] for r in got.collect()} == {
+        1: 5.0, 2: 7.0, 3: 2.5, 4: 1.5
+    }
+    assert pipe.migrate() == 0
+
+
 def _pytest_raises_any():
     import pytest as _pytest
 

@@ -133,3 +133,13 @@ def test_aqe_splits_skewed_join_at_runtime(spark, skewed_df):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_salted_join_rejects_build_preserving_types(spark):
+    left = spark.createDataFrame([("a", 1)], ["k", "v"])
+    right = spark.createDataFrame([("a", 1.0), ("b", 2.0)], ["k", "w"])
+    for how in ("right", "full", "outer", "right_outer"):
+        with pytest.raises(ValueError, match="salted_join"):
+            salted_join(left, right, "k", how=how)
+    # probe-preserving types still work
+    assert salted_join(left, right, "k", how="left_anti").count() == 0

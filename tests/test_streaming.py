@@ -1342,3 +1342,91 @@ def test_running_total_sum_rounds_once(spark):
     want = float(Fraction(units, 10**4))  # exact ratio, one rounding
     assert got == want
     assert float(units) / 10**4 != want  # the double-rounded value
+
+
+def test_dedup_index_bad_band_config_valueerror(spark, tmp_path):
+    """apply_dedup_index_batch must reject invalid band configs with
+    ValueError even under python -O (was a bare assert)."""
+    from dynamic_etl_pipeline_spark.streaming.sinks import apply_dedup_index_batch
+
+    df = spark.createDataFrame([(1, "some text")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="divisible"):
+        apply_dedup_index_batch(df, 0, str(tmp_path / "idx"),
+                                num_perm=64, bands=13)
+
+
+def test_max_ts_footer_handles_directory_and_missing_column(spark, tmp_path):
+    """ADVICE r4: _max_ts_from_footer raised on Spark's directory-style
+    parquet and on frames without a ts column, defeating the documented
+    Spark-action fallback. Directory layouts now glob part files; bad
+    inputs return None instead of raising."""
+    import datetime as dt
+
+    from dynamic_etl_pipeline_spark.queries.streaming import (
+        _max_ts_from_footer,
+    )
+
+    # Spark-written directory: must NOT raise. (Spark's writer omits
+    # min/max stats for this timestamp column, so None -> the caller's
+    # Spark-action fallback — the advisor's exact scenario.)
+    d = str(tmp_path / "ev.parquet")
+    rows = [(i, dt.datetime(2024, 1, 1) + dt.timedelta(hours=i))
+            for i in range(10)]
+    spark.createDataFrame(rows, "id long, ts timestamp").repartition(
+        3
+    ).write.mode("overwrite").parquet(d)
+    got = _max_ts_from_footer(d)  # no exception is the contract
+    if got is not None:
+        assert got.replace(tzinfo=None) == dt.datetime(2024, 1, 1, 9)
+
+    # pyarrow-written multi-file directory (stats present, like the
+    # driver fixtures): the glob must aggregate the max across parts
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pdir = tmp_path / "pa_ev.parquet"
+    pdir.mkdir()
+    for i, hrs in enumerate([[1, 5], [9, 3]]):
+        tbl = pa.table({
+            "id": list(range(len(hrs))),
+            "ts": [dt.datetime(2024, 1, 1) + dt.timedelta(hours=h)
+                   for h in hrs],
+        })
+        pq.write_table(tbl, str(pdir / f"part-{i}.parquet"))
+    got = _max_ts_from_footer(str(pdir))
+    assert got is not None and got.replace(tzinfo=None) == dt.datetime(
+        2024, 1, 1, 9
+    )
+
+    no_ts = str(tmp_path / "nots.parquet")
+    spark.createDataFrame([(1,)], "id long").write.mode(
+        "overwrite"
+    ).parquet(no_ts)
+    assert _max_ts_from_footer(no_ts) is None  # no ts column -> fallback
+    assert _max_ts_from_footer(str(tmp_path / "missing.parquet")) is None
+
+
+def test_sentinel_drain_and_interval_join_have_one_home():
+    """The sentinel staging runs only inside the drain helper, and the
+    purchase→click interval join is built only in its own helper."""
+    import inspect
+    from pathlib import Path
+
+    import dynamic_etl_pipeline_spark as pkg
+    from dynamic_etl_pipeline_spark.queries import streaming
+
+    root = Path(pkg.__file__).parent
+    calls = {
+        str(p.relative_to(root)): p.read_text().count("_stage_event_sentinels(")
+        for p in sorted(root.rglob("*.py"))
+    }
+    # the def line and the one call
+    assert {k: n for k, n in calls.items() if n} == {"queries/streaming.py": 2}
+    assert inspect.getsource(streaming._sentinel_drain).count(
+        "_stage_event_sentinels(") == 1
+
+    src = inspect.getsource(streaming)
+    join = inspect.getsource(streaming._purchase_click_join)
+    assert join.count("INTERVAL 1 HOUR") == 1
+    for needle in ("INTERVAL 1 HOUR", "leftOuter", "rightOuter", "fullOuter"):
+        assert src.count(needle) == join.count(needle), needle

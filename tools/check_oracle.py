@@ -15,11 +15,12 @@ import math
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from dynamic_etl_pipeline_spark.session import get_spark  # noqa: E402
 

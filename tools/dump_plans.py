@@ -8,8 +8,9 @@ Usage: python tools/dump_plans.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from dynamic_etl_pipeline_spark.plans.inspect import formatted_plan  # noqa: E402
 from dynamic_etl_pipeline_spark.queries import QUERIES  # noqa: E402

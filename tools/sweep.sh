@@ -3,7 +3,8 @@
 # oracle at sf0.001 / sf0.01 / sf0.1. The driver's per-round
 # CORRECTNESS_r*.json samples ~50 of the registered queries; this is
 # the committed, reproducible full-coverage artifact the COVERAGE.md
-# header refers to (run it from /root/repo; ~15 min for all three).
+# header refers to (it runs from its own checkout's root; ~15 min
+# for all three).
 #
 # Usage: tools/sweep.sh [out_file]        (default SWEEP.txt)
 set -e
